@@ -31,7 +31,11 @@ regression and sandbox load):
   its series is reported under ``sentinel`` — monotone drift there is
   environment load, not regression;
 - the full report (never truncated by log-tail capture) is also written
-  to ``BENCH_full.json`` next to this script.
+  to ``BENCH_full.json`` next to this script;
+- ``codegen``/``certification_codegen`` give each tier's Janino
+  compilations (count and seconds) in its warm pass and in its timed
+  passes: a timed phase that compiles again has outgrown the codegen
+  cache (``session.py``).
 
 Timing wraps a ``count()``-free action: ``write.format("noop")``
 exercises the full plan including result materialization without driver
@@ -177,7 +181,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     queries = all_queries()
 
-    from big_data_chicago_crimes_spark.session import release_scratch_caches
+    from big_data_chicago_crimes_spark.session import codegen_counters, release_scratch_caches
 
     def run(name: str, d: str) -> None:
         df = queries[name].build(spark, d)
@@ -193,15 +197,25 @@ def main() -> None:
         run(name, d)
         return time.perf_counter() - t0
 
+    def codegen_since(start: tuple[int, float]) -> dict[str, float]:
+        # Janino compilations (codegen cache misses) since ``start``: a
+        # timed phase that compiles again means the cache is too small
+        # for the tier's working set
+        compiles, secs = codegen_counters(spark)
+        return {"compiles": compiles - start[0], "compile_s": round(secs - start[1], 3)}
+
     def tier(
         names: list[str], d: str, sentinel: list[float] | None = None
-    ) -> tuple[dict[str, float], dict[str, list[float]]]:
+    ) -> tuple[dict[str, float], dict[str, list[float]], dict[str, dict[str, float]]]:
         # Global warm pass FIRST: running every query once before any
         # timing means the earliest-timed queries don't absorb JVM-wide
         # JIT/C2 compilation that later queries get for free. Same total
         # executions as per-query warmup, but position-independent.
+        start = codegen_counters(spark)
         for name in names:
             run(name, d)
+        codegen = {"warm": codegen_since(start)}
+        start = codegen_counters(spark)
         medians: dict[str, float] = {}
         spread: dict[str, list[float]] = {}
         for i, name in enumerate(names):
@@ -212,11 +226,12 @@ def main() -> None:
             spread[name] = [round(samples[0], 3), round(samples[-1], 3)]
         if sentinel is not None:
             sentinel.append(round(timed(SENTINEL, d), 3))
-        return medians, spread
+        codegen["timed"] = codegen_since(start)
+        return medians, spread, codegen
 
     sentinel_series: list[float] = []
-    timings, spread = tier(HEADLINE, sf_dir, sentinel_series)
-    cert_timings, cert_spread = tier(CERTIFICATION, cert_sf_dir)
+    timings, spread, codegen = tier(HEADLINE, sf_dir, sentinel_series)
+    cert_timings, cert_spread, cert_codegen = tier(CERTIFICATION, cert_sf_dir)
 
     def sf_of(d: str):
         sf = d.rstrip("/").rsplit("sf", 1)[-1]
@@ -229,12 +244,14 @@ def main() -> None:
         "queries": timings,
         "spread": spread,
         "sentinel": {"name": SENTINEL, "series_sec": sentinel_series},
+        "codegen": codegen,
         "passes": PASSES,
         "stat": "median",
         "sf": sf_of(sf_dir),
         "certification_total_sec": round(sum(cert_timings.values()), 3),
         "certification_queries": cert_timings,
         "certification_spread": cert_spread,
+        "certification_codegen": cert_codegen,
         "certification_sf": sf_of(cert_sf_dir),
     }
     # Full report to a file too: the driver's log-tail capture truncates,

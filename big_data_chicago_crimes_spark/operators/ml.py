@@ -265,12 +265,14 @@ def pearson_correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
             6,
         ).alias(f"__c_{i}_{j}")
 
-    aggs = [cell(i, j) for i in range(len(cols)) for j in range(len(cols))]
-    row = df.agg(*aggs).head()
+    # the matrix is symmetric: aggregate the upper triangle only and
+    # mirror it, which also makes the output exactly symmetric
+    k = len(cols)
+    row = df.agg(*[cell(i, j) for i in range(k) for j in range(i, k)]).head()
     rows = [
-        (cols[i], cols[j], row[f"__c_{i}_{j}"])
-        for i in range(len(cols))
-        for j in range(len(cols))
+        (cols[i], cols[j], row[f"__c_{min(i, j)}_{max(i, j)}"])
+        for i in range(k)
+        for j in range(k)
     ]
     return df.sparkSession.createDataFrame(
         rows, "col_a string, col_b string, corr double"

@@ -200,7 +200,10 @@ CRIMES_RAW_SCHEMA = _st(
 )
 
 # Post-cleaning shape produced by operators.cleaning.clean_crimes
-# (mirrors the reference's df_cleaned, Dataset.py:83-145, bugs fixed).
+# (mirrors the reference's df_cleaned, Dataset.py:83-145, bugs fixed),
+# in output order. The derived ``year`` takes the raw ``Year``'s place:
+# Spark matches column names without case, so withColumn("year", ...)
+# replaces it.
 CRIMES_CLEAN_COLUMNS = [
     "ID",
     "Case Number",
@@ -212,12 +215,11 @@ CRIMES_CLEAN_COLUMNS = [
     "District",
     "Community Area",
     "FBI Code",
-    "Year",
+    "year",
     "Updated On",
     "Latitude",
     "Longitude",
     "month",
-    "year",
     "day",
     "hour",
     "dayofweek",

@@ -31,6 +31,10 @@ Usage:
   python scale_bench.py --smoke      # 2 replicas at sf0.01, one untimed
                                      # pass per query (generator + suite
                                      # sanity, ~a minute)
+
+The JSON's ``codegen`` gives each tier's Janino compilations (count and
+seconds) in its warm pass and in its timed passes; timed-pass
+compilations mean the codegen cache (``session.py``) is too small.
 """
 
 from __future__ import annotations
@@ -269,7 +273,7 @@ def main() -> None:
 
     queries = all_queries()
 
-    from big_data_chicago_crimes_spark.session import release_scratch_caches
+    from big_data_chicago_crimes_spark.session import codegen_counters, release_scratch_caches
 
     def run(name: str, d: str) -> None:
         queries[name].build(spark, d).write.format("noop").mode("overwrite").save()
@@ -283,6 +287,10 @@ def main() -> None:
         print(json.dumps({"smoke": "ok", "generated": dst, "queries_run": len(names)}))
         return
 
+    # Janino compilations (codegen cache misses) per tier and phase,
+    # read outside the timed region
+    codegen = {d: {"warm": [0, 0.0], "timed": [0, 0.0]} for d in (src, dst)}
+
     # Interleaved tiers (r10): the r10 full run exposed that measuring
     # all of sf0.1 then all of sf1 lets a multi-minute external load
     # burst hit ONE tier and silently bias ratios in either direction
@@ -291,14 +299,20 @@ def main() -> None:
     # per pass puts them under the same instantaneous environment, so
     # drift cancels in the ratio; best-of-3 then drops any pass a burst
     # still straddled.
-    def timed(n: str, d: str) -> float:
+    def timed(n: str, d: str, phase: str = "timed") -> float:
+        c0 = codegen_counters(spark)
         t0 = time.perf_counter()
         run(n, d)
-        return time.perf_counter() - t0
+        dt = time.perf_counter() - t0
+        c1 = codegen_counters(spark)
+        tally = codegen[d][phase]
+        tally[0] += c1[0] - c0[0]
+        tally[1] += c1[1] - c0[1]
+        return dt
 
     for d in (src, dst):  # warm pass per tier (also builds lake indexes)
         for n in names:
-            run(n, d)
+            timed(n, d, "warm")
     small: dict[str, float] = {n: float("inf") for n in names}
     big: dict[str, float] = {n: float("inf") for n in names}
     for _ in range(3):
@@ -315,6 +329,13 @@ def main() -> None:
                 "ratio": round(big[n] / small[n], 2) if small[n] > 0 else None,
             }
             for n in names
+        },
+        "codegen": {
+            tier: {
+                phase: {"compiles": c, "compile_s": round(secs, 3)}
+                for phase, (c, secs) in codegen[d].items()
+            }
+            for tier, d in (("sf0.1", src), ("sf1", dst))
         },
     }
     with open(os.path.join(REPO, "BENCH_SCALE.json"), "w") as f:

@@ -36,7 +36,7 @@ def main() -> int:
 
     from big_data_chicago_crimes_spark.functions.text import tokens
     from big_data_chicago_crimes_spark.operators.dedup import spread_for_compute
-    from big_data_chicago_crimes_spark.queries.olap_queries import load_tables
+    from big_data_chicago_crimes_spark.sources.readers import load_tables
     from big_data_chicago_crimes_spark.session import get_spark
 
     spark = get_spark(app_name="repetition-fold-ab")

@@ -72,6 +72,18 @@ def test_clean_crimes_pipeline(raw):
     assert (r6.Arrest, r6.Domestic) == (0, 1)
 
 
+def test_clean_crimes_columns_match_documented_schema(spark):
+    """schemas.CRIMES_CLEAN_COLUMNS is the cleaned frame's shape, in
+    order: the derived ``year`` replaces the raw ``Year`` in place."""
+    from big_data_chicago_crimes_spark.schemas import (
+        CRIMES_CLEAN_COLUMNS,
+        CRIMES_RAW_SCHEMA,
+    )
+
+    raw = spark.createDataFrame([], CRIMES_RAW_SCHEMA)
+    assert clean_crimes(raw).columns == CRIMES_CLEAN_COLUMNS
+
+
 def test_null_census_counts(spark):
     df = spark.createDataFrame(
         [(1, None), (2, "x"), (None, None)], "a int, b string"

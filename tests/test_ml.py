@@ -109,10 +109,13 @@ def test_correlation_matrix_diagonal(spark, sf_dir):
     df = all_queries()["ml_correlation_matrix"].build(spark, sf_dir)
     rows = df.collect()
     assert len(rows) == 16
+    cells = {(r.col_a, r.col_b): r.corr for r in rows}
     for r in rows:
         if r.col_a == r.col_b:
             assert r.corr == pytest.approx(1.0)
         assert -1.0 <= r.corr <= 1.0
+        # one triangle is computed and mirrored: exactly symmetric
+        assert cells[(r.col_b, r.col_a)] == r.corr
 
 
 def test_cross_validated_lr(spark, sf_dir):

@@ -332,3 +332,38 @@ def test_maximal_spans_candidate_pipeline_planned_once(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     release_scratch_caches()
     assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+
+
+# The nine short queries perfbench's ``olap`` workload cycles through:
+# one pass generates more classes than Spark's stock 100-entry codegen
+# cache holds.
+OLAP_CYCLE = [
+    "events_count_by_type",
+    "hourly_max_event_count",
+    "orders_quarter_pivot",
+    "orders_lake_partitioned_scan",
+    "revenue_by_nation",
+    "pricing_summary",
+    "orders_running_total",
+    "events_sliding_1h_30m",
+    "lineitem_rollup",
+]
+
+
+def test_codegen_cache_holds_a_query_cycle(spark, sf_dir):
+    """A session that re-runs the same queries (the menu, a registry
+    cycle) must reuse their generated classes: with Spark's 100-entry
+    default the second cycle recompiled ~50 of them, so every pass paid
+    Janino again (session.py sizes the cache)."""
+    from big_data_chicago_crimes_spark.session import codegen_counters, release_scratch_caches
+
+    def cycle():
+        for name in OLAP_CYCLE:
+            QUERIES[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            release_scratch_caches()
+
+    cycle()
+    before, _ = codegen_counters(spark)
+    cycle()
+    recompiled = codegen_counters(spark)[0] - before
+    assert recompiled == 0, f"{recompiled} classes recompiled on the second cycle"
