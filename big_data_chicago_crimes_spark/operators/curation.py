@@ -19,8 +19,6 @@ document-frequency cap bounding the fan-out of hot tokens.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -159,14 +157,12 @@ def connected_components(
 
     Lineage is truncated with an eager ``localCheckpoint`` per round so
     the plan stays O(1) deep instead of growing by two joins per
-    iteration. For adversarially long chains at massive scale, the
-    two-phase large-star/small-star algorithm (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) converges
-    in O(log²) rounds and slots in behind the same signature;
-    diameter-bound propagation is the right default for dedup graphs
-    (A/B'd at sf1, r10: star LOSES 47.7 vs 32.8 s on the near-clique
-    dedup graph). Raises after ``max_iter`` rounds rather than
-    returning a silently-unconverged labeling.
+    iteration. Rounds are diameter-bound, which suits near-clique dedup
+    graphs: a large-star/small-star form (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14; O(log²) rounds) lost
+    the r10 sf1 A/B on the dedup graph, 47.7 vs 32.8 s. Raises after
+    ``max_iter`` rounds rather than returning a silently-unconverged
+    labeling.
 
     Checkpoint durability: by default lineage is cut with
     ``localCheckpoint`` — executor-local block storage, cheap, but LOST
@@ -251,115 +247,7 @@ def connected_components(
         return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
-        "graph diameter exceeds max_iter; raise it or switch to the "
-        "large-star/small-star variant for chain-shaped graphs"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-    reliable: bool = False,
-) -> DataFrame:
-    """Connected components via large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — same signature and output contract as
-    ``connected_components``: returns ``(id, component)`` with
-    ``component`` the minimum reachable node id.
-
-    Where min-label propagation needs one round per unit of graph
-    DIAMETER, the alternation converges in O(log²) rounds regardless of
-    diameter: each round rewires the edge set itself toward a union of
-    stars centered at component minima.
-
-    - large-star(u): every strictly larger neighbor of ``u`` is
-      re-attached to m(u) = min(N(u) ∪ {u}); edges to smaller neighbors
-      survive via those neighbors' own large-star step, so connectivity
-      is preserved while long chains halve.
-    - small-star(u): ``u`` and its smaller neighbors all attach to the
-      minimum of that set, collapsing local funnels into stars.
-
-    Both phases emit canonically-oriented (bigger, smaller) edges, so
-    the fixpoint test is set equality of the oriented edge set (two
-    ``exceptAll`` probes — same cost class as a propagation round's
-    convergence count). Per round: two groupBy-join pairs on node id —
-    shuffle volume proportional to the CURRENT edge set, which shrinks
-    toward one edge per node. Lineage is cut per round exactly like the
-    propagation variant (localCheckpoint, or ``reliable=True`` for
-    executor-loss durability via the session-scoped checkpoint root on
-    a real cluster).
-
-    Propagation remains the default for near-dup dedup graphs (their
-    clusters are near-cliques — diameter 2-3, so 3-4 cheap rounds beat
-    the alternation's heavier per-round work; A/B at sf1 in
-    BENCH_ATTRIBUTION_r07.md); this variant is the right engine for
-    chain-shaped / adversarial-diameter graphs, certified identical on a
-    planted 256-link chain by tests/test_curation.py.
-    """
-    cut = _lineage_cut(edges, reliable)
-
-    nodes = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
-        .distinct()
-    )
-    nodes = cut(nodes)
-    # canonical orientation: u > v (self-loops are singleton noise)
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    e = cut(e)
-    for _ in range(max_iter):
-        # large-star: m(u) = min(N(u) ∪ {u}); attach each v > u to m(u)
-        nbrs = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least("__mv", "u").alias("m"))
-        )
-        large = (
-            nbrs.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over the (bigger, smaller) orientation: u and all
-        # its smaller neighbors attach to min(smaller neighbors)
-        sm = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(sm, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(sm.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        small = cut(small)
-        changed = (
-            small.exceptAll(e).union(e.exceptAll(small)).limit(1).count()
-        )
-        e = small
-        if changed == 0:
-            labels = (
-                e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-            )
-            return nodes.join(labels, "id", "left").select(
-                "id",
-                F.coalesce("component", F.col("id")).alias("component"),
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
+        "graph diameter exceeds max_iter; raise max_iter"
     )
 
 
@@ -469,7 +357,7 @@ def _vocab_side(vocab: DataFrame) -> DataFrame:
     while a genuinely huge vocabulary falls back to a partitioned join
     instead of flooding the driver. The 1-row N+V ``totals`` frames keep
     their explicit hints — they are constant-sized by construction.
-    A/B r14 (scripts/bench_vocab_broadcast.py, interleaved min runs):
+    A/B r14 (BENCH_ATTRIBUTION_r14.md, interleaved min runs):
     sf0.1 aqe/hinted unigram 0.93x, bigram 0.94x; sf1 unigram 1.03x,
     bigram 0.85x — the hint bought nothing AQE doesn't already do."""
     return vocab
@@ -539,7 +427,7 @@ def unigram_logprob(
     # multiplicity column: at the r10 40-token fixture vocabulary that
     # form lost (1.08 vs 0.93 s — nothing to reduce by construction),
     # but re-taken at the 100k-vocab Zipf realism fixture (VERDICT r10
-    # #4, scripts/bench_lm_join_realism.py) with web-like repetition
+    # #4, BENCH_SCALE_r11.md) with web-like repetition
     # (1.28 tokens per distinct (doc, token) pair) it WINS at both
     # sf0.1-scale and 10x (0.939 vs 0.994 s at 10x), and its advantage
     # grows with document length and repetitiveness — the 100 TB
@@ -707,7 +595,7 @@ def bigram_logprob(
         .groupBy(id_col, *carry_cols, "__w1", "__w2")
         .agg(F.count(F.lit(1)).alias("__k"))
     )
-    # Form A/B (scripts/bench_bigram_persist.py, sf0.1 interleaved
+    # Form A/B (BENCH_ATTRIBUTION_r13.md, sf0.1 interleaved
     # min-of-4): (a) deriving c2 by re-aggregating doc_bi "to save a
     # scan" LOSES (2.43 vs 1.97 s) — doc_bi's shuffle is keyed
     # (doc, w1, w2) and moves the per-doc pair frame, which is far
@@ -781,7 +669,7 @@ def dsir_logratio(
     count frames broadcast into the scoring join, so the corpus never
     shuffles. Per-doc aggregation is the only corpus-sized shuffle.
     The per-token join form is deliberate AND measured: at the
-    100k-vocab Zipf realism fixture (scripts/bench_lm_join_realism.py,
+    100k-vocab Zipf realism fixture (BENCH_SCALE_r11.md,
     VERDICT r10 #4) pre-reducing to distinct (doc, token) pairs LOSES
     here (3.12 vs 2.42 s at 10x) — unlike unigram_logprob, both joins
     are already broadcast-side, so the pre-reduce only adds a

@@ -23,11 +23,17 @@ correctness gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_chicago_crimes_spark.functions.text import doc_fingerprint, tokens
 from big_data_chicago_crimes_spark.functions.vectors import cosine_similarity, l2_norm
+
+
+def spread_enabled(spark: SparkSession) -> bool:
+    """Whether ``spark.bdcc.spreadCompute`` is on — the one local-mode
+    gate every spread and build-side pin reads."""
+    return spark.conf.get("spark.bdcc.spreadCompute", "false").lower() == "true"
 
 
 def spread_for_compute(df: DataFrame) -> DataFrame:
@@ -42,7 +48,7 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     thousands of splits and the flag stays off: no plan probing, no
     ``df.rdd`` materialization, no gratuitous shuffle at scale."""
     spark = df.sparkSession
-    if spark.conf.get("spark.bdcc.spreadCompute", "false").lower() == "true":
+    if spread_enabled(spark):
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 
@@ -62,7 +68,7 @@ def _pin_pair_join_build_side(df: DataFrame) -> DataFrame:
     an unconditional hint would OOM the driver if the build side ever
     outgrew memory at a larger local SF (VERDICT r2 #6)."""
     spark = df.sparkSession
-    if spark.conf.get("spark.bdcc.spreadCompute", "false").lower() != "true":
+    if not spread_enabled(spark):
         return df
     try:
         threshold_conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
@@ -130,13 +136,13 @@ def exact_dedup(
 _FUZZY_SIG_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789"
 
 
-
 def _fuzzy_char_histogram(text: Column) -> Column:
-    """(a-z, 0-9) character-count histogram of lower(text) — the L1
-    prefilter signature BOTH fuzzy constructions verify with. They are
-    contract-bound to stay output-identical (tests pin equality), so
-    the formula lives exactly once; widening the alphabet or changing
-    the bound happens here for both."""
+    """(a-z, 0-9) character-count histogram of lower(text) — the
+    signature of the fuzzy verify's L1 prefilter. Every edit changes at
+    most two counts by one, so an L1 distance above 2·max_dist proves
+    dist > max_dist at a fraction of the Levenshtein DP's cost; the
+    prefilter prunes only, so the SQL oracle replays just the
+    Levenshtein."""
     lowered = F.lower(text)
     return F.array(
         *[
@@ -150,124 +156,15 @@ def _fuzzy_char_histogram(text: Column) -> Column:
 
 
 def _sig_l1(a: Column, b: Column) -> Column:
-    """L1 distance of two _fuzzy_char_histogram arrays (HOF form — the
-    unrolled 36-term tree measured 1.7x slower, see the verify note)."""
+    """L1 distance of two _fuzzy_char_histogram arrays. zip_with +
+    aggregate HOF, not 36 unrolled getItem terms: the unrolled tree
+    measured 1.7x slower end-to-end (A/B at sf1: 20 s vs 11.6 s — it
+    blows the codegen method budget, like the hyperplane signature)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: F.abs(x - y)),
         F.lit(0),
         lambda acc, x: acc + x,
     )
-
-def fuzzy_match_pairs(
-    df: DataFrame,
-    block_cols: list[str],
-    max_dist: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    band_width: int = 16,
-) -> DataFrame:
-    """Edit-distance near-match pairs: every pair inside a
-    ``block_cols`` block whose Levenshtein distance is ≤ ``max_dist``
-    (the fuzzy record-linkage move — variant titles, re-crawled pages
-    with small diffs — where token-set Jaccard is blind to
-    character-level edits). Output: (id_a, id_b, dist), id_a < id_b.
-
-    Scale shape — candidates never enumerate whole blocks: strings are
-    banded by length (``band_width`` ≥ ``max_dist``, so a qualifying
-    pair is always in the same or adjacent band — |len(a)−len(b)| ≤
-    dist is the classic length lower bound), and the join key is
-    (block, band) / (block, band, band+1): candidate count is bounded
-    by band populations, not block². The O(n·m) Levenshtein verify runs
-    only on candidates, with Spark's thresholded ``levenshtein(l, r,
-    k)`` early-exiting past ``max_dist``. ``band_width`` must be ≥
-    ``max_dist`` or adjacent-band coverage breaks (raises); the result
-    set is band_width-INDEPENDENT for any valid width (banding prunes
-    candidates, never matches — |len diff| > max_dist already implies
-    dist > max_dist), so pick the smallest width the distance budget
-    allows: tighter bands mean smaller per-(block, band) populations
-    and quadratically fewer candidate pairs.
-
-    Before the DP, a second sound prefilter runs per candidate: the L1
-    distance of the (a-z, 0-9) character histograms — every edit moves
-    at most two counts by one, so L1 > 2·max_dist proves
-    dist > max_dist at ~1/200 the DP's cost (measured 4.5× end-to-end
-    at sf1, where same-length cohorts band together). Both prefilters
-    are result-invariant, so oracles replay only the Levenshtein.
-    Cell-pair enumeration is still quadratic in same-length cohort
-    density; ``fuzzy_match_pairs_segments`` below (PassJoin-style
-    inverted segment index, VERDICT r8 #4) removes that and is the
-    registered query's path. This banded form stays as the
-    oracle-shaped construction and the equality-test counterpart
-    (identical results by design — both are exact candidate supersets
-    over the same verify)."""
-    if band_width < max_dist:
-        raise ValueError(
-            f"band_width {band_width} must be >= max_dist {max_dist} "
-            "(length-band adjacency covers |len diff| <= max_dist only then; "
-            "adding exactly band_width to a length shifts its band by one)"
-        )
-    sig = _fuzzy_char_histogram(F.col(text_col))
-    base = df.select(
-        *block_cols,
-        F.col(id_col).alias("__id"),
-        F.col(text_col).alias("__t"),
-        F.floor(F.length(text_col) / band_width).alias("__band"),
-        sig.alias("__sig"),
-    )
-    # Catalyst pushes the (deterministic) Levenshtein predicate into the
-    # hash join's residual condition, so the verify executes inside the
-    # join stage — spreading the STREAM side beforehand is what actually
-    # parallelizes the banded-DP work (a post-join repartition gets
-    # hoisted above the pushed-down verify and spreads nothing; the
-    # hashing-stage pattern, local-mode only via the config gate)
-    base = spread_for_compute(base)
-    a, b = base.alias("a"), base.alias("b")
-
-    def block_eq(extra):
-        # an OR of band conditions would stop Catalyst extracting the
-        # equi-keys (the join would enumerate whole blocks, band-filtered
-        # after the fact) — so same-band and adjacent-band run as two
-        # separate HASH joins keyed on (block, band), unioned before the
-        # verify; each unordered pair appears exactly once (same band →
-        # id order; adjacent → band order)
-        cond = extra
-        for c in block_cols:
-            cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-        return cond
-
-    same = a.join(
-        b,
-        block_eq(F.col("a.__band") == F.col("b.__band"))
-        & (F.col("a.__id") < F.col("b.__id")),
-    )
-    adjacent = a.join(b, block_eq(F.col("a.__band") + 1 == F.col("b.__band")))
-
-    def verify(cand):
-        # sound O(|alphabet|) prefilter before the O(len·k) DP: every
-        # edit changes at most two character counts by one, so the L1
-        # distance of the (a-z, 0-9) histograms of a true match is
-        # ≤ 2·max_dist — dense candidate cells full of far-apart strings
-        # (the dominant population at scale) die here ~200× cheaper
-        # than in the Levenshtein itself; the final result is
-        # prefilter-independent, so the SQL oracle needs no mirror
-        # zip_with/aggregate HOF, NOT 36 unrolled getItem terms: the
-        # unrolled tree measured 1.7× SLOWER end-to-end (A/B at sf1:
-        # 20 s vs 11.6 s — same pathology as the hyperplane signature's
-        # codegen-budget blowout, just at smaller scale), so the tight
-        # interpreted per-array loop wins again
-        l1 = _sig_l1(F.col("a.__sig"), F.col("b.__sig"))
-        d = F.levenshtein(F.col("a.__t"), F.col("b.__t"), max_dist)
-        return (
-            cand.filter(l1 <= 2 * max_dist)
-            .select(
-                F.least(F.col("a.__id"), F.col("b.__id")).alias("id_a"),
-                F.greatest(F.col("a.__id"), F.col("b.__id")).alias("id_b"),
-                d.alias("dist"),
-            )
-            .filter((F.col("dist") >= 0) & (F.col("dist") <= max_dist))
-        )
-
-    return verify(same).unionByName(verify(adjacent))
 
 
 def _even_partition(l: Column, i: Column, nseg: int) -> tuple[Column, Column]:
@@ -290,19 +187,20 @@ def fuzzy_match_pairs_segments(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Edit-distance near-match pairs via PassJoin-style segment
-    blocking (Li, Deng, Feng — "PASS-JOIN: A Partition-based Method for
-    Similarity Joins", VLDB 2012): same output contract as
-    ``fuzzy_match_pairs`` — every pair inside a ``block_cols`` block
-    with Levenshtein ≤ ``max_dist`` as (id_a, id_b, dist), id_a < id_b
-    — but candidates are generated by an inverted SEGMENT index instead
-    of (block, length-band) cell enumeration, so candidate count tracks
-    the true-match count (shared long substrings), not cell density².
-    The length-banded form's one scale caveat (VERDICT r8: same-length
-    cohorts band together, cell pairs grow quadratically in density)
-    disappears; this is the registered query's path, and the banded
-    form remains library surface (tests pin output equality on both
-    organic and adversarial data).
+    """Edit-distance near-match pairs: every pair inside a
+    ``block_cols`` block whose Levenshtein distance is ≤ ``max_dist``,
+    as (id_a, id_b, dist), id_a < id_b (the fuzzy record-linkage move —
+    variant titles, re-crawled pages with small diffs — where token-set
+    Jaccard is blind to character-level edits).
+
+    Candidates come from PassJoin-style segment blocking (Li, Deng,
+    Feng — "PASS-JOIN: A Partition-based Method for Similarity Joins",
+    VLDB 2012): an inverted SEGMENT index, so candidate count tracks
+    the true-match count (shared long substrings), not block² or the
+    squared density of same-length cohorts that a (block, length-band)
+    cell enumeration pays (VERDICT r8). tests/test_dedup.py pins the
+    output against an all-pairs Levenshtein self-join on an adversarial
+    corpus; the registered query's SQL oracle checks it on organic data.
 
     Pigeonhole: partition the SHORTER string s (length l) into τ+1
     segments (τ = max_dist). If dist(s, t) ≤ τ, at most τ edits touch
@@ -316,11 +214,11 @@ def fuzzy_match_pairs_segments(
     windowed substrings for every partner length l ∈ [m−τ, m] —
     O(τ²·(τ+1)) short rows, LINEAR in corpus size (HOF-generated,
     one explode). One hash join on (block, l, i, content) + an id
-    tie-break for equal lengths, distinct candidate id pairs, then the
-    same sound L1-histogram prefilter + thresholded Levenshtein verify
-    as the banded form — candidates and prefilters prune only, so the
-    result set is construction-independent and the banded form's SQL
-    oracle replays it unchanged."""
+    tie-break for equal lengths, distinct candidate id pairs, then a
+    sound L1-histogram prefilter + thresholded Levenshtein verify —
+    candidates and prefilters prune only, so the result set is
+    construction-independent and the length-banded SQL oracle replays
+    it unchanged."""
     tau = max_dist
     nseg = tau + 1
     base = df.select(
@@ -435,9 +333,8 @@ def fuzzy_match_pairs_segments(
     # and building it into ``base`` made both verify join sides pay it
     # for every corpus row — the dominant verify term (A/B sf1: 3.2 s
     # of the 5.0 s total; candidates are ~3k pairs there, so scoped
-    # signatures are ~30× fewer text scans). Same L1 + thresholded-
-    # Levenshtein verify as the banded form — prefilters and scoping
-    # prune only, so the two constructions stay output-identical.
+    # signatures are ~30× fewer text scans). Prefilters and scoping
+    # prune only, so the output is the exact all-pairs answer.
     lhs = base.select(
         F.col("__id").alias("__ida"),
         F.col("__t").alias("__ta"),
@@ -463,8 +360,8 @@ def fuzzy_match_pairs_segments(
     # xxhash64 collision on the (block, len, i, segment) key would
     # otherwise surface a pair the within-a-block contract forbids —
     # the Levenshtein verify never looks at block columns, so it
-    # cannot kill that candidate class (~2^-64 per pair, but the
-    # banded form and the SQL oracle are exactly block-scoped)
+    # cannot kill that candidate class (~2^-64 per pair, but the SQL
+    # oracle is exactly block-scoped)
     for i in range(len(block_cols)):
         cand = cand.filter(
             F.col(f"__blk_a{i}").eqNullSafe(F.col(f"__blk_b{i}"))
@@ -1306,153 +1203,6 @@ def bloom_membership_flags(
         probed.join(F.broadcast(bits), probed["pos"] == F.col("__bpos"), "left")
         .groupBy(key_col)
         .agg(F.bool_and(F.col("__bpos").isNotNull()).alias("bloom_hit"))
-    )
-
-
-def incremental_dedup_with_bloom(
-    new_df: DataFrame,
-    corpus_fingerprints: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits_per_key: int = 4,
-    num_hashes: int = 3,
-    bloom: DataFrame | None = None,
-) -> DataFrame:
-    """``incremental_exact_dedup`` with a bloom prefilter on the corpus
-    probe: bloom MISSES are accepted without touching the fingerprint
-    index (no false negatives ⇒ sound), and only the hit fraction pays
-    the exact anti-join. Survivors are IDENTICAL to the unfiltered
-    operator (property-tested) — the bloom changes the plan, never the
-    answer. At 100 TB this turns the per-crawl index shuffle from
-    batch-sized into hit-sized: when most of a crawl is new (the steady
-    state), the expensive join nearly vanishes, and the bitmap itself
-    is broadcast-sized.
-
-    ``bloom``: a PREBUILT filter frame — ``bloom_index`` (position
-    rows) or ``bloom_index_packed`` (64-bit words; detected by the
-    ``word_id`` column) — materialized next to the fingerprint index
-    and extended per accepted batch. This is the production shape:
-    rebuilding the filter from the corpus per batch costs an
-    index-sized aggregate every crawl (measured r10: the inline
-    rebuild swamped the anti-join savings at fixture scale — 0.8 s
-    exact vs 2.9 s with an inline 16-bit rebuild; with a materialized
-    packed filter the prefilter overhead is the broadcast probe only).
-    When None, the filter is built inline from ``corpus_fingerprints``
-    at ``bits_per_key``/``num_hashes`` (certification fixtures do
-    this so the oracle can replay the build)."""
-    keyed = new_df.select(
-        doc_fingerprint(text_col).alias("fingerprint"), F.col(id_col)
-    )
-    batch_min = keyed.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    # NULL-text docs fingerprint to NULL: the groupBy above dedups them
-    # against each other (NULLs are one group, matching the exact
-    # operator), but the bloom-flags equi-join below would silently
-    # DROP the survivor (NULL never equals NULL in a join) where the
-    # exact operator keeps it — route it straight to the fresh set
-    null_fp = batch_min.filter(F.col("fingerprint").isNull())
-    batch_min = batch_min.filter(F.col("fingerprint").isNotNull())
-    index = (
-        bloom
-        if bloom is not None
-        else bloom_index(
-            corpus_fingerprints.select("fingerprint"),
-            bits_per_key=bits_per_key,
-            num_hashes=num_hashes,
-        )
-    )
-    # The flags functions read num_bits AND num_hashes from the filter
-    # frame's constant columns — a prebuilt filter probed with a
-    # different hash count than its build would silently produce false
-    # negatives, so that knob is not exposed here (ADVICE r10); the
-    # ``num_hashes`` argument above applies only to the inline build.
-    flags_fn = (
-        bloom_membership_flags_packed
-        if "word_id" in index.columns
-        else bloom_membership_flags
-    )
-    flagged = batch_min.join(
-        flags_fn(batch_min.select("fingerprint"), index),
-        "fingerprint",
-    )
-    misses = flagged.filter(~F.col("bloom_hit"))
-    fresh_hits = flagged.filter(F.col("bloom_hit")).join(
-        corpus_fingerprints.select("fingerprint"), "fingerprint", "left_anti"
-    )
-    fresh = (
-        misses.select(id_col)
-        .unionByName(fresh_hits.select(id_col))
-        .unionByName(null_fp.select(id_col))
-    )
-    return new_df.join(fresh, id_col, "left_semi")
-
-
-def bloom_index_packed(
-    keys: DataFrame,
-    key_col: str = "fingerprint",
-    bits_per_key: int = 4,
-    num_hashes: int = 3,
-) -> DataFrame:
-    """``bloom_index`` packed 64 bits to the word: schema ``(word_id
-    bigint, word bigint, num_bits bigint, num_hashes int)`` where bit
-    ``pos & 63`` of
-    the word for ``pos >> 6`` is set iff ``pos`` is set. Exactly
-    ``num_bits/8`` bytes of payload — the position-table form costs 8
-    bytes per DISTINCT SET BIT (~64× more at production occupancy),
-    which is the difference between a broadcastable sketch and a
-    multi-TB join at large index sizes (ADVICE r9: 10¹² keys at 16
-    bits/key is a 2 TB packed bitmap but tens of TB of position longs).
-    Same geometry, same no-false-negative contract; flags equality is
-    property-tested against the unpacked form."""
-    pos = bloom_index(keys, key_col, bits_per_key, num_hashes)
-    return (
-        pos.groupBy(F.shiftright("pos", 6).alias("word_id"))
-        .agg(
-            F.bit_or(F.expr("shiftleft(1L, cast(pos & 63 as int))")).alias("word"),
-            F.max("num_bits").alias("num_bits"),
-            F.max("num_hashes").alias("num_hashes"),
-        )
-    )
-
-
-def bloom_membership_flags_packed(
-    probe: DataFrame,
-    index: DataFrame,
-    key_col: str = "fingerprint",
-    broadcast: bool = True,
-) -> DataFrame:
-    """``bloom_membership_flags`` over a PACKED index
-    (``bloom_index_packed``): probe positions join on their word id —
-    64× fewer index rows than the position-table join — and the lane
-    test is one shift-and-mask. Geometry (``num_bits``/``num_hashes``)
-    is read from the frame's constants, same soundness argument as the
-    unpacked form (ADVICE r10).
-
-    ``broadcast``: the bitmap is exactly num_bits/8 bytes, computable
-    up front (bits_per_key × |keys| / 8), so the CALLER knows whether
-    it fits the broadcast budget — pass ``False`` past ~a few GiB and
-    the identical plan runs as a shuffle join on ``word_id`` (word_id
-    is uniform by construction — md5-derived positions — so the
-    shuffle is skew-free). The hint is not auto-gated because sizing
-    the frame data-dependently would need a driver-side action on the
-    hot path; a forced broadcast of an over-budget bitmap fails
-    loudly on Spark's broadcast limit rather than degrading (ADVICE
-    r10 corrected the docstring that claimed otherwise)."""
-    probed = _probe_positions(probe, index, key_col).select(
-        key_col, "pos", F.shiftright("pos", 6).alias("word_id")
-    )
-    words = index.select(
-        F.col("word_id").alias("__wid"), F.col("word").alias("__w")
-    )
-    if broadcast:
-        words = F.broadcast(words)
-    hit = (
-        F.col("__w").isNotNull()
-        & (F.expr("(__w >> cast(pos & 63 as int)) & 1") == 1)
-    )
-    return (
-        probed.join(words, probed["word_id"] == F.col("__wid"), "left")
-        .groupBy(key_col)
-        .agg(F.bool_and(hit).alias("bloom_hit"))
     )
 
 

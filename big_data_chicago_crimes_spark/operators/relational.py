@@ -1,17 +1,12 @@
-"""Joins and set operations (SURVEY.md §2.3, §2.7).
+"""Dimension joins (SURVEY.md §2.3).
 
 The reference implements no joins — its one join-shaped operation is a
 driver-side dict lookup between KMeans cluster labels and 25 district
-polygons (Dataset.py:291-312). This module provides the real surface
-that lookup implies, engineered for scale:
-
-- ``dim_join``: broadcast hash join for dimension tables (no shuffle of
-  the fact side — the only sane plan when the fact table is 100 TB and
-  the dim is 25 rows or 25 million).
-- ``semi_join`` / ``anti_join``: EXISTS / NOT EXISTS without
-  materializing the right side's columns.
-- set ops by NAME (``unionByName``) — positional union is a silent
-  corruption bug waiting for a schema evolution.
+polygons (Dataset.py:291-312). ``dim_join`` is the scale form of that
+lookup: a broadcast hash join for dimension tables (no shuffle of the
+fact side — the only sane plan when the fact table is 100 TB and the
+dim is 25 rows or 25 million). Semi/anti joins and set operations are
+plain ``DataFrame`` calls at their call sites.
 """
 
 from __future__ import annotations
@@ -28,26 +23,3 @@ def dim_join(
     sort-merge fallback risk on the first (stats-free) plan."""
     right = F.broadcast(dim) if hint == "broadcast" else dim
     return fact.join(right, on, how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on, "left_anti")
-
-
-def union_all(*dfs: DataFrame) -> DataFrame:
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)

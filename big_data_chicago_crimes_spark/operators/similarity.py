@@ -727,7 +727,11 @@ def semantic_dedup(
     codebook exists. Norms are computed once per row before the pair
     join; candidate pairs shuffle inside their cell's partition only.
     """
-    from big_data_chicago_crimes_spark.operators.dedup import spread_for_compute
+    from big_data_chicago_crimes_spark.operators.dedup import (
+        _pin_pair_join_build_side,
+        spread_enabled,
+        spread_for_compute,
+    )
     from big_data_chicago_crimes_spark.session import scratch_persist
 
     # The assigned frame feeds THREE plan arms (pair left, pair right,
@@ -759,8 +763,7 @@ def semantic_dedup(
     sim = cosine_similarity(
         F.col("__vl"), F.col("__vr"), norm_a=F.col("__nl"), norm_b=F.col("__nr")
     )
-    spark = df.sparkSession
-    if spark.conf.get("spark.bdcc.spreadCompute", "false").lower() == "true":
+    if spread_enabled(df.sparkSession):
         # Local mode (r18): spread the BARE id pairs and attach vectors
         # after, behind size-guarded broadcast hints — the r17
         # lsh_near_dup_pairs pattern (guide §2.3). Spreading the joined
@@ -771,10 +774,6 @@ def semantic_dedup(
         # cluster plan below keeps pairs inside their cell partitions
         # with ZERO id-keyed exchanges, which is why the bare-pair form
         # is not unconditional (attach joins would shuffle by id there).
-        from big_data_chicago_crimes_spark.operators.dedup import (
-            _pin_pair_join_build_side,
-        )
-
         bare = (
             assigned.select(F.col("__id").alias("__idl"), "centroid_id")
             .join(
@@ -1206,10 +1205,9 @@ def ivf_pq_topk(
     32), the two compression levers multiplied.
 
     ``indexed`` must carry ``centroid_id`` (assign_to_centroids /
-    _vectorized) and ``pq_codes`` (pq_encode / pq_encode_vectorized)
-    built with the SAME centroids and codebook this probe receives —
-    the index build is one pass adding both columns, written
-    partitioned by centroid_id."""
+    _vectorized) and ``pq_codes`` (pq_encode) built with the SAME
+    centroids and codebook this probe receives — the index build is
+    one pass adding both columns, written partitioned by centroid_id."""
     for col in ("centroid_id", "pq_codes"):
         if col not in indexed.columns:
             raise ValueError(f"ivf_pq_topk: indexed frame lacks {col!r}")
@@ -1486,57 +1484,6 @@ def pq_encode(
         ]
     )
     return df.withColumn("pq_codes", codes)
-
-
-def pq_encode_vectorized(
-    df: DataFrame, codebook: list[list[list[float]]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Arrow-batched sibling of ``pq_encode`` for the BULK encode pass —
-    the one-time job that compresses a 100 TB embedding corpus into its
-    codes table. Per batch and subspace: broadcast-subtract against the
-    k sub-centroids and square — ``((Vs − Cs)²).sum(-1)``, the SAME
-    (x−y)² formulation the certified expression path folds (ADVICE r14:
-    the earlier gram identity ``‖v‖²+‖c‖²−2·V·Cᵀ`` suffers catastrophic
-    cancellation for near-duplicate vector/sub-centroid pairs, which
-    could exceed the 6dp rounding contract and encode a boundary-value
-    vector differently from the oracle-certified path; the n×k×sub
-    temporary is cheap at sub = dim/m — the coarse assignment's
-    full-dim case bounds the same temporary by row-chunking, see
-    ``assign_to_centroids_vectorized``). Then the same
-    6dp-rounded ranking, and np.argmin's first-minimum = the cid
-    tie-break. The expression form evaluates m·k interpreted
-    fold-aggregates per row (~0.3 ms/row at m=8, k=16) — the right
-    certified probe-path twin, the wrong constant for corpus-scale
-    encoding; this form is vectorized per Arrow batch. Codes equality
-    with ``pq_encode`` on real data is pinned in
-    tests/test_similarity.py (pairwise-vs-fold summation ulps fall
-    inside the rounding contract the same way the IVF vectorized
-    sibling's do)."""
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    m = len(codebook)
-    sub = len(codebook[0][0])
-    Cs = [np.asarray(c, dtype=np.float64) for c in codebook]
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("pq_codes", ArrayType(IntegerType()))]
-    )
-
-    def enc(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _vectors_matrix(pdf, vec_col, dim=m * sub)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for s in range(m):
-                Vs = V[:, s * sub : (s + 1) * sub]
-                diff = Vs[:, None, :] - Cs[s][None, :, :]
-                d = _spark_round6((diff * diff).sum(axis=-1))
-                codes[:, s] = d.argmin(axis=1)
-            out = pdf.copy()
-            out["pq_codes"] = list(codes)
-            yield out
-
-    return df.mapInPandas(enc, schema=out_schema)
 
 
 def pq_adc_topk(

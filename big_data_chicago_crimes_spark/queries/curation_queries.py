@@ -135,8 +135,8 @@ def docs_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant LOSES on this graph — 47.7 s vs 32.8 s at sf1 (10.1 vs
     10.6 s at sf0.1) — because dedup clusters are near-cliques, so
     propagation converges in diameter≈small rounds while star pays more
-    rounds of heavier two-sided joins. Star remains the right tool only
-    for adversarially long chains (see connected_components_star).
+    rounds of heavier two-sided joins. Star would pay off only on
+    adversarially long chains, which dedup graphs are not.
 
     r11 absolute-cost attack (VERDICT r10 #5), both output-identical:
     (1) propagation is frontier-pruned — sf1 rounds stamp as
@@ -291,14 +291,6 @@ def docs_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = bigram_logprob(
         t.documents, "text", "doc_id", carry_cols=("source",), lam=0.75
     )
-    return bigram_perplexity_legs(scored)
-
-
-def bigram_perplexity_legs(scored: DataFrame) -> DataFrame:
-    """The query's two legs over a bigram_logprob frame — shared with
-    scripts/bench_bigram_persist.py so the persist A/B always measures
-    the SHIPPED leg shape (a drifted copy would silently stale the
-    no-persist verdict recorded in operators/curation.py)."""
     src = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("bigram_lp"), 6).alias("lp"),

@@ -16,11 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_chicago_crimes_spark.operators.relational import (
-    anti_join,
-    dim_join,
-    semi_join,
-)
+from big_data_chicago_crimes_spark.operators.relational import dim_join
 from big_data_chicago_crimes_spark.operators.skew import salted_join
 from big_data_chicago_crimes_spark.plans.registry import register
 from big_data_chicago_crimes_spark.sources.readers import load_tables
@@ -274,8 +270,8 @@ def part_catalog_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_chicago_crimes_spark.operators.aggregates import top_k
 
     t = load_tables(spark, sf_dir)
-    never = anti_join(t.part, t.lineitem.select("l_partkey"),
-                      t.part.p_partkey == F.col("l_partkey"))
+    never = t.part.join(t.lineitem.select("l_partkey"),
+                        t.part.p_partkey == F.col("l_partkey"), "left_anti")
     never_leg = never.groupBy("p_brand").agg(F.count("*").alias("cnt")).select(
         F.lit("never_ordered_brand").alias("leg"),
         F.col("p_brand").alias("key"),
@@ -407,10 +403,10 @@ def exists_join_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    have = semi_join(
-        t.customer,
+    have = t.customer.join(
         t.orders.select("o_custkey"),
         t.customer.c_custkey == F.col("o_custkey"),
+        "left_semi",
     )
     segments = (
         have.groupBy("c_mktsegment")

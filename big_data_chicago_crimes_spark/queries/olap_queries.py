@@ -24,13 +24,14 @@ from big_data_chicago_crimes_spark.sources.readers import load_tables
     # and one aggregate instead of two; the slot freed funds
     # embedding_semantic_dedup. The 4×4 matrix form (ml_correlation_matrix)
     # still certifies M13's matrix surface separately.
-    # r10 adjudication (scripts/bench_rollup_merge.py): at sf0.1 the
-    # merged form measures ~0.09 s ABOVE the former pair (the extra
-    # co-moment updates at the two coarser grouping levels cost more
-    # than the nearly-free second scan at that size); at sf1 the scan
-    # is no longer free and the merged form wins — 2.63 s vs 2.71 s
-    # median-of-3 alternating. The one-scan rationale is a scale
-    # property, not an sf0.1 one; kept merged.
+    # r10 adjudication (interleaved A/B; the r9 merge cost is in
+    # BENCH_ATTRIBUTION_r09.md): at sf0.1 the merged form measures
+    # ~0.09 s ABOVE the former pair (the extra co-moment updates at the
+    # two coarser grouping levels cost more than the nearly-free second
+    # scan at that size); at sf1 the scan is no longer free and the
+    # merged form wins — 2.63 s vs 2.71 s median-of-3 alternating. The
+    # one-scan rationale is a scale property, not an sf0.1 one; kept
+    # merged.
     oracle="""
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS cnt, ROUND(SUM(l_quantity), 2) AS sum_qty,

@@ -83,28 +83,20 @@ def get_spark(
         # Parquet scans: keep splits small enough that a partition of the
         # widest table fits comfortably in executor memory at high SF.
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # Floor on scan splits (bounded by row-group granularity — a
+        # single-row-group file still scans as one task; see
+        # spark.bdcc.spreadCompute below for that case).
+        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         # Compute-heavy per-row stages (minhash/simhash hashing) insert a
         # spreading repartition only when this flag is on. Local masters
         # need it (small files = 1 row group = 1 task doing ALL the
         # hashing); on a cluster the scan already has thousands of
         # splits, so the extra shuffle would be pure waste — default off.
+        # ``extra_conf`` overrides it, like every conf set here.
         .config(
             "spark.bdcc.spreadCompute",
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD",
-                "true" if master.startswith("local") else "false",
-            ),
+            "true" if master.startswith("local") else "false",
         )
-    )
-    # Floor on scan splits (bounded by row-group granularity — a
-    # single-row-group file still scans as one task; see
-    # spark.bdcc.spreadCompute above for that case). Overridable for
-    # A/B runs: SPARK_GRAFT_MIN_PARTITION_NUM=0 leaves Spark's default.
-    min_part = os.environ.get("SPARK_GRAFT_MIN_PARTITION_NUM", str(shuffle_partitions))
-    if min_part not in ("", "0"):
-        builder = builder.config("spark.sql.files.minPartitionNum", min_part)
-    builder = (
-        builder
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

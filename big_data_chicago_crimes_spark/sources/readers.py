@@ -5,7 +5,6 @@ Reference source operators covered (SURVEY.md §2.1):
 - S1 CSV scan (Dataset.py:77) → ``read_csv`` with an explicit schema
   (never ``inferSchema`` — that is a second full pass over the data).
 - S2 Parquet scan (Dataset.py:71-74 et al.) → ``read_parquet``.
-- S5 literal table (Dataset.py:656,740,856) → ``literal_table``.
 
 Plus the testdata loader used by every registered query: ``load_tables``
 returns a dict of lazily-planned DataFrames for the star schema +
@@ -70,11 +69,6 @@ def read_json(
         .option("timestampFormat", timestamp_format)
         .json(path)
     )
-
-
-def literal_table(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
-    """1-row/few-row DataFrame from driver scalars (metric persistence)."""
-    return spark.createDataFrame(rows, schema)
 
 
 # cache-key → (resolved read schema, per-column temporal units). The

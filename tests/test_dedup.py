@@ -355,151 +355,10 @@ def test_bloom_index_no_false_negatives_and_bounded(spark):
     assert 0 < fps < 100  # tight sizing exercises the FP path, bounded rate
 
 
-def test_bloom_packed_flags_equal_unpacked(spark):
-    """The packed 64-bit-word bitmap (the representation that keeps the
-    sketch broadcastable at large index sizes — ADVICE r9) is
-    flag-for-flag identical to the position-table form, at both the
-    tight fixture sizing and a production sizing, so it inherits the
-    no-false-negative contract by equality."""
-    from pyspark.sql import functions as F
-
-    from big_data_chicago_crimes_spark.operators.dedup import (
-        bloom_index,
-        bloom_index_packed,
-        bloom_membership_flags,
-        bloom_membership_flags_packed,
-    )
-
-    keys = spark.range(150).select(
-        F.concat(F.lit("member-"), F.col("id")).alias("fingerprint")
-    )
-    probe = spark.range(300).select(
-        F.when(F.col("id") < 150, F.concat(F.lit("member-"), F.col("id")))
-        .otherwise(F.concat(F.lit("outsider-"), F.col("id")))
-        .alias("fingerprint")
-    )
-    for bpk, k in [(4, 3), (14, 7)]:
-        # geometry (num_bits AND num_hashes) travels in the filter frame
-        # itself — probing can't be run with a mismatched hash count
-        # (ADVICE r10)
-        unpacked = {
-            r.fingerprint: r.bloom_hit
-            for r in bloom_membership_flags(
-                probe, bloom_index(keys, bits_per_key=bpk, num_hashes=k)
-            ).collect()
-        }
-        packed = {
-            r.fingerprint: r.bloom_hit
-            for r in bloom_membership_flags_packed(
-                probe,
-                bloom_index_packed(keys, bits_per_key=bpk, num_hashes=k),
-            ).collect()
-        }
-        assert packed == unpacked, (bpk, k)
-        assert all(packed[f"member-{i}"] for i in range(150))  # no false negatives
-    # packing really packs: word rows ≤ ceil(num_bits/64), never one
-    # row per set bit
-    idx = bloom_index_packed(keys, bits_per_key=14, num_hashes=7)
-    num_bits = idx.agg(F.max("num_bits")).first()[0]
-    assert idx.count() <= num_bits // 64 + 1
-
-
-def test_incremental_dedup_with_bloom_matches_exact(spark):
-    """The bloom prefilter changes the plan, never the answer: survivors
-    must equal incremental_exact_dedup's on a batch mixing in-batch
-    dups, corpus dups, and fresh docs."""
-    from big_data_chicago_crimes_spark.operators.dedup import (
-        doc_fingerprint,
-        incremental_dedup_with_bloom,
-        incremental_exact_dedup,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "known document"), (2, "another known one")],
-        "doc_id long, text string",
-    )
-    corpus_fps = corpus.select(doc_fingerprint("text").alias("fingerprint"))
-    batch = spark.createDataFrame(
-        [
-            (10, "fresh content"),
-            (11, "Fresh   Content"),
-            (12, "KNOWN document"),
-            (13, "also brand new"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {
-        r.doc_id
-        for r in incremental_dedup_with_bloom(batch, corpus_fps).collect()
-    }
-    want = {
-        r.doc_id for r in incremental_exact_dedup(batch, corpus_fps).collect()
-    }
-    assert got == want == {10, 13}
-
-    # Production shape: a PREBUILT filter (packed or position form)
-    # passed via ``bloom`` yields identical survivors — the filter is
-    # materialized once next to the fingerprint index, never rebuilt
-    # from the corpus per batch.
-    from big_data_chicago_crimes_spark.operators.dedup import (
-        bloom_index,
-        bloom_index_packed,
-    )
-
-    for prebuilt in (
-        bloom_index(corpus_fps, bits_per_key=12),
-        bloom_index_packed(corpus_fps, bits_per_key=12),
-    ):
-        got_pre = {
-            r.doc_id
-            for r in incremental_dedup_with_bloom(
-                batch, corpus_fps, bits_per_key=12, bloom=prebuilt
-            ).collect()
-        }
-        assert got_pre == want
-
-
-def test_fuzzy_match_pairs_banding_and_distances(spark):
-    """Length-banded Levenshtein pairs: same-band and adjacent-band
-    matches are both found (a pair straddling a 16-char band boundary
-    must not be lost), distances are exact, and pairs past the
-    threshold or in different blocks are excluded."""
-    from big_data_chicago_crimes_spark.operators.dedup import fuzzy_match_pairs
-
-    near_boundary = "x" * 62
-    rows = [
-        (1, "en", "s0", "kitten sat here"),
-        (2, "en", "s0", "sitten sat here"),      # dist 1, same band
-        (3, "en", "s0", near_boundary),           # len 62 -> band 3
-        (4, "en", "s0", near_boundary + " ab"),   # len 65 -> band 4, dist 3
-        (5, "en", "s1", "kitten sat here"),       # other block: excluded
-        (6, "en", "s0", "completely different text entirely"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, lang string, source string, text string"
-    )
-    got = {
-        (r.id_a, r.id_b): r.dist
-        for r in fuzzy_match_pairs(df, ["lang", "source"], max_dist=5).collect()
-    }
-    assert got == {(1, 2): 1, (3, 4): 3}, got
-
-
-def test_fuzzy_match_pairs_band_width_guard(spark):
-    from big_data_chicago_crimes_spark.operators.dedup import fuzzy_match_pairs
-
-    df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    import pytest
-
-    with pytest.raises(ValueError, match="band_width"):
-        fuzzy_match_pairs(df, [], max_dist=65, band_width=64)
-
-
 def test_fuzzy_segments_semantics(spark):
-    """The PassJoin-style segment path finds same-band, band-straddling,
-    and length-differing pairs with exact distances, and excludes
-    cross-block and past-threshold pairs — same fixture contract as the
-    banded test above."""
+    """The PassJoin-style segment path finds equal-length,
+    16-char-band-straddling and length-differing pairs with exact
+    distances, and excludes cross-block and past-threshold pairs."""
     from big_data_chicago_crimes_spark.operators.dedup import (
         fuzzy_match_pairs_segments,
     )
@@ -525,20 +384,21 @@ def test_fuzzy_segments_semantics(spark):
     assert got == {(1, 2): 1, (3, 4): 3}, got
 
 
-def test_fuzzy_segments_equals_banded_on_adversarial_corpus(spark):
+def test_fuzzy_segments_equals_all_pairs_on_adversarial_corpus(spark):
     """Candidate-superset property, checked end-to-end (VERDICT r8 #4):
     on a seeded random corpus engineered to stress the construction —
     shared vocabulary word-soup, dense same-length cohorts, planted
     edits of every kind (prefix insert, suffix delete, mid-string
     substitution, boundary-straddling edits) at distances around the
-    threshold — the segment path and the banded path return IDENTICAL
-    (id_a, id_b, dist) sets. Both constructions share the verify, so
-    equality pins that neither candidate generator misses a qualifying
-    pair the other finds."""
+    threshold — the segment path returns exactly the (id_a, id_b, dist)
+    set of the definition itself: an all-pairs Levenshtein self-join
+    inside each block. Equality pins that the candidate generator
+    misses no qualifying pair."""
     import random
 
+    from pyspark.sql import functions as F
+
     from big_data_chicago_crimes_spark.operators.dedup import (
-        fuzzy_match_pairs,
         fuzzy_match_pairs_segments,
     )
 
@@ -572,9 +432,23 @@ def test_fuzzy_segments_equals_banded_on_adversarial_corpus(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, lang string, source string, text string"
     )
-    banded = {
+    a, b = df.alias("a"), df.alias("b")
+    dist = F.levenshtein(F.col("a.text"), F.col("b.text"))
+    all_pairs = {
         (r.id_a, r.id_b, r.dist)
-        for r in fuzzy_match_pairs(df, ["lang", "source"], max_dist=8).collect()
+        for r in a.join(
+            b,
+            (F.col("a.lang") == F.col("b.lang"))
+            & (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            dist.alias("dist"),
+        )
+        .filter(F.col("dist") <= 8)
+        .collect()
     }
     seg = {
         (r.id_a, r.id_b, r.dist)
@@ -582,8 +456,8 @@ def test_fuzzy_segments_equals_banded_on_adversarial_corpus(spark):
             df, ["lang", "source"], max_dist=8
         ).collect()
     }
-    assert banded == seg
-    assert len(banded) >= 40  # the planted pairs actually exercise recall
+    assert seg == all_pairs
+    assert len(all_pairs) >= 40  # the planted pairs actually exercise recall
 
 
 def _py_shared_spans(a: str, b: str, L: int) -> int:
@@ -732,48 +606,24 @@ def test_bloom_empty_filter_cold_start(spark):
     yet, or a prebuilt filter over zero keys — must flag every probe
     key as a miss ('a miss is definitely new'), never return an empty
     flags frame that an inner join then uses to silently drop the whole
-    batch. Covers the inline build, both prebuilt forms, and the full
-    incremental operator."""
+    batch."""
     from pyspark.sql import functions as F
 
     from big_data_chicago_crimes_spark.operators.dedup import (
         bloom_index,
-        bloom_index_packed,
         bloom_membership_flags,
-        bloom_membership_flags_packed,
-        incremental_dedup_with_bloom,
     )
 
     empty_keys = spark.createDataFrame([], "fingerprint string")
     probe = spark.range(5).select(
         F.concat(F.lit("new-"), F.col("id")).alias("fingerprint")
     )
-    for flags_fn, idx in (
-        (bloom_membership_flags, bloom_index(empty_keys)),
-        (bloom_membership_flags_packed, bloom_index_packed(empty_keys)),
-    ):
-        flags = {r.fingerprint: r.bloom_hit for r in flags_fn(probe, idx).collect()}
-        assert len(flags) == 5, "empty filter must still emit one flag per key"
-        assert not any(flags.values()), "empty filter can have no hits"
-
-    batch = spark.createDataFrame(
-        [(10, "first ever doc"), (11, "second ever doc")],
-        "doc_id long, text string",
-    )
-    # cold start: empty corpus, inline build
-    got = {
-        r.doc_id for r in incremental_dedup_with_bloom(batch, empty_keys).collect()
+    flags = {
+        r.fingerprint: r.bloom_hit
+        for r in bloom_membership_flags(probe, bloom_index(empty_keys)).collect()
     }
-    assert got == {10, 11}
-    # prebuilt empty filters (position + packed forms)
-    for prebuilt in (bloom_index(empty_keys), bloom_index_packed(empty_keys)):
-        got_pre = {
-            r.doc_id
-            for r in incremental_dedup_with_bloom(
-                batch, empty_keys, bloom=prebuilt
-            ).collect()
-        }
-        assert got_pre == {10, 11}
+    assert len(flags) == 5, "empty filter must still emit one flag per key"
+    assert not any(flags.values()), "empty filter can have no hits"
 
 
 def test_jaccard_dispatch_collect_is_one_row(spark, monkeypatch):
@@ -851,16 +701,14 @@ def test_intra_doc_dedup_keep_first_and_census(spark):
     assert (row.cleaned_text, row.n_removed) == ("a.b", 1)
 
 
-def test_incremental_bloom_keeps_null_text_docs_like_exact(spark):
-    """A NULL-text batch doc fingerprints to NULL; the bloom path must
-    keep the same survivors as the exact operator (the NULL fingerprint
-    previously vanished through the flags equi-join)."""
+def test_incremental_exact_dedup_keeps_null_text_docs(spark):
+    """A NULL-text batch doc fingerprints to NULL: it forms its own
+    dedup group and survives the corpus anti-join (NULL never matches),
+    so it is kept like any fresh doc."""
     from big_data_chicago_crimes_spark.operators.dedup import (
-        incremental_dedup_with_bloom,
         incremental_exact_dedup,
     )
     from big_data_chicago_crimes_spark.functions.text import doc_fingerprint
-    from pyspark.sql import functions as F
 
     corpus = spark.createDataFrame(
         [(100, "old news")], "doc_id long, text string"
@@ -870,12 +718,7 @@ def test_incremental_bloom_keeps_null_text_docs_like_exact(spark):
         "doc_id long, text string",
     )
     exact = {r["doc_id"] for r in incremental_exact_dedup(batch, corpus).collect()}
-    bloom = {
-        r["doc_id"]
-        for r in incremental_dedup_with_bloom(batch, corpus).collect()
-    }
-    assert bloom == exact
-    assert 3 in bloom
+    assert exact == {1, 3, 4}
 
 
 def test_line_level_dedup_preserves_null_text_docs(spark):

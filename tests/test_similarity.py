@@ -998,28 +998,6 @@ def test_nearest_centroid_cells_sql_form_matches_column_form(spark, sf_dir):
     assert sliced.filter(F.col("a") != F.col("b")).count() == 0
 
 
-def test_pq_encode_vectorized_matches_expression_form(spark, sf_dir):
-    """The Arrow bulk-encode kernel must emit the SAME codes as the
-    certified expression form on real embeddings — the contract that
-    lets a 100 TB corpus encode through BLAS while the probe path stays
-    oracle-checked."""
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        pq_codebook,
-        pq_encode,
-        pq_encode_vectorized,
-    )
-    from big_data_chicago_crimes_spark.sources.readers import load_tables
-
-    emb = load_tables(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    book = pq_codebook(8, 16, 64)
-    expr = {r["vec_id"]: list(r["pq_codes"]) for r in pq_encode(emb, book).collect()}
-    vec = {
-        r["vec_id"]: list(r["pq_codes"])
-        for r in pq_encode_vectorized(emb, book).collect()
-    }
-    assert expr == vec and len(expr) > 0
-
-
 def test_ivf_pq_topk_planted_duplicates_rank_first(spark):
     """IVF-PQ recall by construction on a corpus whose vectors are BUILT
     from the codebook (vector i = concat of sub-centroid (i+s) mod k per
