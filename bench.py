@@ -150,8 +150,7 @@ CERTIFICATION = [
     # pair path, and its constant-cardinality blocking key is exactly the
     # shape that hides at sf0.1 and explodes at scale (56× at 10× data)
     "embedding_near_dup_certification",  # organic census + planted twins
-    "embedding_semantic_dedup",  # SemDeDup planted-twin membership (cell-quadratic at fixed k: cert tier)
-    "embedding_semantic_dedup_vec",  # same membership, BLAS forms + normed survivor index (r10)
+    "embedding_semantic_dedup_vec",  # SemDeDup planted-twin membership (cell-quadratic at fixed k: cert tier)
     "embedding_near_dups_lsh_seeded",
     "docs_sketch_seeded_recall",
     "embedding_ivf_topk_lake_seeded",

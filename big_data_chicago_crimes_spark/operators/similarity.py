@@ -125,16 +125,15 @@ _PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def _sql_vec_expr(s: str) -> str:
-    """Normalize a string vector reference for the one-SQL-string fast
-    paths (hyperplane_signature, nearest_centroid_cells, sig_sql). A
-    plain identifier is backtick-quoted so a column named like a
-    keyword can't parse as something else; anything more structured
-    (``a.b``, ``slice(v, 1, 8)``, a pre-backticked name) is treated as
-    a SQL EXPRESSION and interpolated verbatim — the documented
-    contract of the string form (ADVICE r14: a raw name needing quotes,
-    e.g. with a dash or space, would otherwise fail to parse or
-    silently resolve as an arithmetic expression; pass such columns
-    pre-backticked or use the Column form)."""
+    """Normalize a string vector reference for the one-SQL-string
+    expression builders (hyperplane_signature, nearest_centroid_cells,
+    sig_sql). A plain identifier is backtick-quoted so a column named
+    like a keyword can't parse as something else; anything more
+    structured (``a.b``, ``slice(v, 1, 8)``, a pre-backticked name) is
+    treated as a SQL EXPRESSION and interpolated verbatim (ADVICE r14:
+    a raw name needing quotes, e.g. with a dash or space, would
+    otherwise fail to parse or silently resolve as an arithmetic
+    expression; pass such columns pre-backticked)."""
     return f"`{s}`" if _PLAIN_IDENT.match(s) else s
 
 
@@ -163,11 +162,11 @@ def cosine_topk(
 
 def _plane_sig_sql(vec_expr: str, dim: int, n_planes: int, table: int) -> str:
     """The n_planes-bit signature as ONE SQL expression string — shared
-    by ``hyperplane_signature``'s fast-planning path and
-    ``lsh_near_dup_pairs``' per-table sig_sql, so the two can never
-    drift. Each plane dot keeps the HOF zip_with/aggregate form
-    (unrolling was measured 5× slower — codegen-budget blowout, see the
-    inline note below); the whole tree parses JVM-side in one call
+    by ``hyperplane_signature`` and ``lsh_near_dup_pairs``' per-table
+    sig_sql, so the two can never drift. Each plane dot keeps the HOF
+    zip_with/aggregate form: unrolling all n_planes×dim terms into
+    codegen'd expressions measured 5× SLOWER (tree too large for
+    JIT/codegen budgets). The whole tree parses JVM-side in one call
     instead of one py4j round trip per plane coordinate (~0.7-1.6 s of
     driver time per signature at 8×64)."""
     terms = []
@@ -182,37 +181,18 @@ def _plane_sig_sql(vec_expr: str, dim: int, n_planes: int, table: int) -> str:
 
 
 def hyperplane_signature(
-    vec_col: Column | str, dim: int, n_planes: int = 8, table: int = 0
+    vec_col: str, dim: int, n_planes: int = 8, table: int = 0
 ) -> Column:
     """LSH bucket id (int 0..2^n_planes-1): bit i = sign(v · plane_i).
     The planes are fixed literals → the whole signature evaluates inside
-    codegen; no UDF, no shuffle. ``table`` selects an independent plane
+    the plan; no UDF, no shuffle. ``table`` selects an independent plane
     set for multi-table LSH (table 0 = the historical planes).
 
-    A string ``vec_col`` takes the one-SQL-string path
-    (``_plane_sig_sql``): a plain column name is backtick-quoted, and
-    anything else is interpolated as a SQL EXPRESSION (``_sql_vec_expr``
-    — pass names that need quoting pre-backticked, or use the Column
-    form); the Column path builds the same expression nodes and is kept
-    for derived Column inputs (value parity pinned by test)."""
-    if isinstance(vec_col, str):
-        return F.expr(_plane_sig_sql(_sql_vec_expr(vec_col), dim, n_planes, table))
-    v = vec_col
-    planes = _hyperplanes(dim, n_planes, table)
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        # HOF zip_with/aggregate per plane: interpreted lambda, but a
-        # tight per-array loop — unrolling all n_planes×dim terms into
-        # codegen'd expressions measured 5× SLOWER (tree too large for
-        # JIT/codegen budgets); keep the HOF form deliberately
-        plane_arr = F.array(*[F.lit(float(x)) for x in plane])
-        d = F.aggregate(
-            F.zip_with(v, plane_arr, lambda x, p: x.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
+    ``vec_col`` is a column name or a SQL expression (``_sql_vec_expr``:
+    a plain name is backtick-quoted, anything else is interpolated
+    verbatim). ``_lsh_probe_buckets`` is the driver-side twin for a
+    literal query vector."""
+    return F.expr(_plane_sig_sql(_sql_vec_expr(vec_col), dim, n_planes, table))
 
 
 def hyperplane_lsh_buckets(
@@ -359,6 +339,31 @@ def _hamming_masks(n_planes: int, radius: int) -> list[int]:
     return masks
 
 
+def _lsh_probe_buckets(
+    query_vec: list[float], n_planes: int = 8, multiprobe_hamming: int = 1
+) -> list[int]:
+    """The sorted buckets a single literal query probes: its own
+    signature bucket plus every bucket within ``multiprobe_hamming`` bit
+    flips. The ONE driver-side bucket rule, shared by ``ann_topk`` and
+    the bucket-partitioned lake query. Each plane dot replays Spark's
+    SEQUENTIAL zip_with/aggregate fold (plain left-to-right additions),
+    NOT a BLAS dot: pairwise summation can flip the sign of a near-zero
+    plane dot, putting the query in a different bucket than an EXACT
+    corpus copy of it gets from ``hyperplane_signature`` — which would
+    break the exact-duplicate recall guarantee at
+    ``multiprobe_hamming=0``."""
+    q_bucket = 0
+    for i, plane in enumerate(_hyperplanes(len(query_vec), n_planes)):
+        acc = 0.0
+        for x, p in zip(query_vec, plane):
+            acc += float(x) * float(p)
+        if acc > 0:
+            q_bucket |= 1 << i
+    return sorted(
+        {q_bucket ^ m for m in _hamming_masks(n_planes, multiprobe_hamming)}
+    )
+
+
 def ann_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -371,26 +376,9 @@ def ann_topk(
     """Approximate top-k: probe the query's LSH bucket plus buckets
     within ``multiprobe_hamming`` bit flips, then exact cosine re-rank.
     Probing H=1 over 8 planes scans 9/256 of the data in expectation."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes)
-    # the query signature replays Spark's SEQUENTIAL zip_with/aggregate
-    # fold (plain left-to-right additions), NOT a BLAS dot: pairwise
-    # summation can flip the sign of a near-zero plane dot, putting the
-    # query in a different bucket than an EXACT corpus copy of it got
-    # from hyperplane_lsh_buckets — which would break the module's
-    # exact-duplicate recall guarantee at multiprobe_hamming=0
-    def _fold_dot(plane) -> float:
-        acc = 0.0
-        for x, pl in zip(query_vec, plane):
-            acc += float(x) * float(pl)
-        return acc
-
-    q_bucket = int(
-        sum((1 << i) for i, plane in enumerate(planes) if _fold_dot(plane) > 0)
-    )
-    probes = {q_bucket ^ m for m in _hamming_masks(n_planes, multiprobe_hamming)}
-    bucketed = hyperplane_lsh_buckets(df, dim, n_planes, vec_col)
-    candidates = bucketed.filter(F.col("bucket").isin(sorted(probes)))
+    probes = _lsh_probe_buckets(query_vec, n_planes, multiprobe_hamming)
+    bucketed = hyperplane_lsh_buckets(df, len(query_vec), n_planes, vec_col)
+    candidates = bucketed.filter(F.col("bucket").isin(probes))
     return cosine_topk(candidates, query_vec, k, vec_col, id_col)
 
 
@@ -583,7 +571,7 @@ def batch_ann_topk(
 
 
 def nearest_centroid_cells(
-    vec_col: Column | str, centroids: list[list[float]], n: int, offset: int = 0
+    vec_col: str, centroids: list[list[float]], n: int, offset: int = 0
 ) -> Column:
     """Array of the ``n`` nearest centroid ids to ``vec_col`` — the cell
     ranking shared by the batch-IVF probe stage (n = nprobe),
@@ -597,77 +585,37 @@ def nearest_centroid_cells(
     measured ulp-level divergence from Spark's sequential F.aggregate),
     so ranking on the raw sum would make the cell choice
     engine-dependent at the last ulp. Same portability contract the
-    cosine rank already uses.
+    cosine rank already uses; ``_rank_probe_cells`` is the driver-side
+    twin for a literal query vector.
 
-    Pass ``vec_col`` as a STRING for the fast-planning form: the
-    IDENTICAL HOF expression tree built as ONE SQL string (the sig_sql
+    ``vec_col`` is a column name or a SQL expression (``_sql_vec_expr``).
+    The HOF expression tree is built as ONE SQL string (the sig_sql
     convention — Column-by-Column literal construction costs a py4j
     round trip PER CENTROID COORDINATE, measured ~3.8 s of driver time
-    for an 8×16×8 codebook; the parsed string builds the same nodes in
-    one call). A plain column name is backtick-quoted; anything else is
-    interpolated as a SQL EXPRESSION (``_sql_vec_expr`` — names needing
-    quotes go pre-backticked, or use the Column form). Fully UNROLLING
-    the arithmetic instead was measured and REJECTED: 2.8-4.6 s exec vs
-    1.9 s for the HOF form at sf0.1 — the 1024-term tree blows the
-    whole-stage-codegen budget, the same result hyperplane_signature's
-    inline note records for the LSH unroll. The Column form is kept for
-    callers holding derived Column expressions; both build the same
-    expression, so distances are identical by construction.
+    for an 8×16×8 codebook). Fully UNROLLING the arithmetic instead was
+    measured and REJECTED: 2.8-4.6 s exec vs 1.9 s for the HOF form at
+    sf0.1 — the 1024-term tree blows the whole-stage-codegen budget, the
+    same result ``_plane_sig_sql`` records for the LSH unroll.
     """
-    if isinstance(vec_col, str):
-        sub = len(centroids[0])
-        # ALWAYS slice to the centroid length: zip_with pads a longer
-        # vector with NULLs (64-dim vec vs 8-dim sub-centroid → NULL
-        # distances that sort by cid alone — caught by the parity check)
-        vec_expr = f"slice({_sql_vec_expr(vec_col)}, {offset + 1}, {sub})"
-        cells = ", ".join(
-            f"named_struct('cid', {i}, 'cv', array("
-            + ",".join(f"{float(x)!r}D" for x in c)
-            + "))"
-            for i, c in enumerate(centroids)
-        )
-        return F.expr(
-            f"""transform(slice(array_sort(transform(array({cells}),
-                c -> named_struct('d', round(aggregate(
-                        zip_with({vec_expr}, c.cv,
-                                 (x, y) -> (CAST(x AS DOUBLE) - y)
-                                           * (CAST(x AS DOUBLE) - y)),
-                        0.0D, (acc, x) -> acc + x), 6),
-                     'cid', c.cid))), 1, {n}), s -> s.cid)"""
-        )
-    if offset:
-        raise ValueError(
-            "nearest_centroid_cells: offset requires the SQL-string form"
-        )
-    cent_lits = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in c]).alias("cv"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+    sub = len(centroids[0])
+    # ALWAYS slice to the centroid length: zip_with pads a longer
+    # vector with NULLs (64-dim vec vs 8-dim sub-centroid → NULL
+    # distances that sort by cid alone)
+    vec_expr = f"slice({_sql_vec_expr(vec_col)}, {offset + 1}, {sub})"
+    cells = ", ".join(
+        f"named_struct('cid', {i}, 'cv', array("
+        + ",".join(f"{float(x)!r}D" for x in c)
+        + "))"
+        for i, c in enumerate(centroids)
     )
-    dists = F.transform(
-        cent_lits,
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        c.getField("cv"),
-                        lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("d"),
-            c.getField("cid").alias("cid"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.array_sort(dists), 1, n), lambda s: s.getField("cid")
+    return F.expr(
+        f"""transform(slice(array_sort(transform(array({cells}),
+            c -> named_struct('d', round(aggregate(
+                    zip_with({vec_expr}, c.cv,
+                             (x, y) -> (CAST(x AS DOUBLE) - y)
+                                       * (CAST(x AS DOUBLE) - y)),
+                    0.0D, (acc, x) -> acc + x), 6),
+                 'cid', c.cid))), 1, {n}), s -> s.cid)"""
     )
 
 
@@ -698,119 +646,6 @@ def assign_to_centroids(
     return df.withColumn(
         "centroid_id",
         nearest_centroid_cells(vec_col, centroids, 1)[0].cast("int"),
-    )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    centroids: list[list[float]],
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication"): cluster-scoped
-    semantic pruning of an embedded corpus. Every vector is assigned to
-    its nearest codebook centroid (``assign_to_centroids`` — rounded-
-    distance ranking, cid tie-break, so membership is engine-portable);
-    within each cluster, a vector is PRUNED when any smaller-id member
-    of the same cluster has rounded cosine ≥ ``threshold`` with it
-    (deterministic keep-one-per-ε-ball without a components pass).
-    Returns the kept (id, centroid_id) rows. Comparisons NEVER cross
-    cluster boundaries — the paper's point: pair work is Σ|cell|², and
-    the production contract is k ∝ N (cells stay ~constant-sized, e.g.
-    50k clusters at web scale), which makes the pair stage corpus-
-    linear. A FIXED small codebook (like the certification fixture's
-    k=8) is therefore quadratic-in-cell-size by design — certification
-    scale only; grow k with the corpus (``ivf_index`` trains one with
-    KMeans), or route discovery through ``lsh_near_dup_pairs`` when no
-    codebook exists. Norms are computed once per row before the pair
-    join; candidate pairs shuffle inside their cell's partition only.
-    """
-    from big_data_chicago_crimes_spark.operators.dedup import (
-        _pin_pair_join_build_side,
-        spread_enabled,
-        spread_for_compute,
-    )
-    from big_data_chicago_crimes_spark.session import scratch_persist
-
-    # The assigned frame feeds THREE plan arms (pair left, pair right,
-    # final anti-join); without a persist each arm replays the O(N·k)
-    # centroid ranking, which under the production k ∝ N contract is
-    # the dominant term (measured sf1/k=160: 2.9 s per replay, ~3× in
-    # the unpersisted plan). Scratch-persisted so bench/callers release
-    # it after materialization; result-invariant.
-    assigned = scratch_persist(
-        assign_to_centroids(df, centroids, vec_col=vec_col).select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            l2_norm(F.col(vec_col)).alias("__nrm"),
-            "centroid_id",
-        )
-    )
-    left = assigned.select(
-        F.col("__id").alias("__idl"),
-        F.col("__v").alias("__vl"),
-        F.col("__nrm").alias("__nl"),
-        "centroid_id",
-    )
-    right = assigned.select(
-        F.col("__id").alias("__idr"),
-        F.col("__v").alias("__vr"),
-        F.col("__nrm").alias("__nr"),
-        "centroid_id",
-    )
-    sim = cosine_similarity(
-        F.col("__vl"), F.col("__vr"), norm_a=F.col("__nl"), norm_b=F.col("__nr")
-    )
-    if spread_enabled(df.sparkSession):
-        # Local mode (r18): spread the BARE id pairs and attach vectors
-        # after, behind size-guarded broadcast hints — the r17
-        # lsh_near_dup_pairs pattern (guide §2.3). Spreading the joined
-        # frame pushed both per-pair vector payloads through the
-        # round-robin exchange; bare pairs are two longs. The cell-id
-        # pair join and the attach joins all read the persisted
-        # ``assigned`` cache. Off local mode this branch is dead: the
-        # cluster plan below keeps pairs inside their cell partitions
-        # with ZERO id-keyed exchanges, which is why the bare-pair form
-        # is not unconditional (attach joins would shuffle by id there).
-        bare = (
-            assigned.select(F.col("__id").alias("__idl"), "centroid_id")
-            .join(
-                assigned.select(F.col("__id").alias("__idr"), "centroid_id"),
-                "centroid_id",
-            )
-            .filter(F.col("__idl") < F.col("__idr"))
-            .select("__idl", "__idr")
-        )
-        lv = assigned.select(
-            F.col("__id").alias("__idl"),
-            F.col("__v").alias("__vl"),
-            F.col("__nrm").alias("__nl"),
-        )
-        rv = assigned.select(
-            F.col("__id").alias("__idr"),
-            F.col("__v").alias("__vr"),
-            F.col("__nrm").alias("__nr"),
-        )
-        paired = (
-            spread_for_compute(bare)
-            .join(_pin_pair_join_build_side(lv), "__idl")
-            .join(_pin_pair_join_build_side(rv), "__idr")
-        )
-    else:
-        paired = left.join(right, "centroid_id").filter(
-            F.col("__idl") < F.col("__idr")
-        )
-    pruned = (
-        paired.withColumn("__cos", F.round(sim, 6))
-        .filter(F.col("__cos") >= threshold)
-        .select(F.col("__idr").alias("__id"))
-        .distinct()
-    )
-    return (
-        assigned.join(pruned, "__id", "left_anti")
-        .select(F.col("__id").alias(id_col), "centroid_id")
     )
 
 
@@ -877,20 +712,31 @@ def semantic_dedup_vectorized(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """SemDeDup, production shape: same contract as ``semantic_dedup``
-    (tests pin output equality on organic and planted data) but the
-    intra-cell pair stage is ONE BLAS gram matrix per cell inside
+    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
+    at web-scale through semantic deduplication"): cluster-scoped
+    semantic pruning of an embedded corpus. Every vector is assigned to
+    its nearest codebook centroid (``assign_to_centroids_vectorized`` —
+    rounded-distance ranking, cid tie-break, so membership is
+    engine-portable); within each cluster, a vector is PRUNED when any
+    smaller-id member of the same cluster (pruned or not) has rounded
+    cosine ≥ ``threshold`` with it — the strict upper triangle in id
+    order, a deterministic keep-one-per-ε-ball without a components
+    pass or a sequential-greedy scan. Returns the kept
+    (id, centroid_id) rows. Zero-norm vectors cos as 0.0, so they never
+    prune and are never pruned.
+
+    The pair stage is ONE BLAS gram matrix per cell inside
     ``applyInPandas`` — the paper's own per-cluster formulation — so
-    per-pair cost is a vectorized multiply-add instead of an
-    interpreted 64-element fold (the dominant term of the pair-join
-    form: measured sf1/k=160, 11.8 s → this form ~1 s class). Cells
-    stay ~constant-sized under k ∝ N, so a cell's gram is bounded
-    memory (|cell|² doubles) and the stage is corpus-linear with
-    corpus-sized shuffle rows. Semantics preserved exactly: zero-norm
-    vectors cos as 0.0, cosines rounded to 6dp before the threshold,
-    and a vector is pruned when ANY smaller-id cell member (pruned or
-    not) matches it — the strict upper triangle in id order, not a
-    sequential-greedy pass."""
+    per-pair cost is a vectorized multiply-add, not an interpreted
+    64-element fold. Comparisons NEVER cross cluster boundaries: pair
+    work is Σ|cell|², and the production contract is k ∝ N (cells stay
+    ~constant-sized, e.g. 50k clusters at web scale), which keeps a
+    cell's gram bounded (|cell|² doubles) and the stage corpus-linear
+    with corpus-sized shuffle rows. A FIXED small codebook (like the
+    certification fixture's k=8) is quadratic-in-cell-size by design —
+    grow k with the corpus (``ivf_index`` trains one with KMeans), or
+    route discovery through ``lsh_near_dup_pairs`` when no codebook
+    exists."""
     import pandas as pd
 
     assigned = assign_to_centroids_vectorized(
@@ -957,7 +803,6 @@ def incremental_semantic_dedup(
     threshold: float = 0.95,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    vectorized_assign: bool = False,
 ) -> DataFrame:
     """SemDeDup for the incremental-crawl shape: dedup a NEW batch
     against a maintained index of previously-KEPT vectors (the vector
@@ -965,38 +810,31 @@ def incremental_semantic_dedup(
     against survivors, never rescan or re-prune the corpus). A batch
     vector is kept iff its cell holds NO index member at rounded cosine
     ≥ ``threshold`` AND no smaller-id batch member matches it (the same
-    any-smaller-id rule as ``semantic_dedup``, so in-batch pruning is
-    order-deterministic, not greedy-sequential). Returns the kept batch
-    (id, centroid_id) rows — append them to the index to continue.
+    any-smaller-id rule as ``semantic_dedup_vectorized``, so in-batch
+    pruning is order-deterministic, not greedy-sequential). Returns the
+    kept batch (id, centroid_id) rows — append them to the index to
+    continue.
 
     Index contract: because only SURVIVORS are indexed, a batch vector
     is compared against strictly fewer corpus members than a full
-    ``semantic_dedup`` recompute over index ∪ batch would use (a pruned
-    corpus vector can no longer prune) — identical results whenever the
-    kept set is ε-ball-representative, and exactly the trade every
-    production incremental dedup makes; documented, tested.
+    ``semantic_dedup_vectorized`` recompute over index ∪ batch would use
+    (a pruned corpus vector can no longer prune) — identical results
+    whenever the kept set is ε-ball-representative, and exactly the
+    trade every production incremental dedup makes; documented, tested.
 
-    Plan shape: batch-sized assignment (O(|batch|·k) — the corpus never
-    re-ranks), one cell-keyed join of the batch against the index (at
-    scale the index is written partitioned by centroid_id, so the probe
-    prunes partitions — the same layout the IVF lake uses), and an
-    in-batch pair join bounded by batch-cell occupancy. Everything is
-    the engine-portable 6dp-rounded column arithmetic, so a SQL oracle
-    replays it verbatim."""
+    Plan shape: batch-sized assignment (``assign_to_centroids_vectorized``,
+    O(|batch|·k) — the corpus never re-ranks; the literal-centroid
+    expression form would cost O(k·dim) plan literals, measured 3.6 s
+    for a 1,000-row batch at k=160 vs ~0.1 s), one cell-keyed join of
+    the batch against the index (at scale the index is written
+    partitioned by centroid_id, so the probe prunes partitions — the
+    same layout the IVF lake uses), and an in-batch pair join bounded
+    by batch-cell occupancy. Cosines are 6dp-rounded column arithmetic,
+    so a SQL oracle replays them verbatim."""
     from big_data_chicago_crimes_spark.session import scratch_persist
 
-    # ``vectorized_assign``: the literal-centroid expression tree costs
-    # O(k·dim) literals — at a production k (hundreds+) its plan build
-    # and interpreted ranking dominate a small batch (measured 3.6 s for
-    # a 1,000-row batch at k=160 vs ~0.1 s vectorized). The certified
-    # query keeps the portable expression form (its SQL oracle replays
-    # that arithmetic; k=8 there); production batches should pass True —
-    # the two forms are equality-tested under the shared 6dp contract.
-    assign = (
-        assign_to_centroids_vectorized if vectorized_assign else assign_to_centroids
-    )
     b = scratch_persist(
-        assign(batch, centroids, vec_col=vec_col).select(
+        assign_to_centroids_vectorized(batch, centroids, vec_col=vec_col).select(
             F.col(id_col).alias("__bid"),
             F.col(vec_col).alias("__bv"),
             l2_norm(F.col(vec_col)).alias("__bn"),
@@ -1162,8 +1000,8 @@ def _rank_probe_cells(
     contract nearest_centroid_cells / batch_ivf_topk use — raw norms
     would let a < 5e-7 distance gap probe a different cell than the
     batch path (tests pin single == batch per query). Each distance is
-    a SEQUENTIAL Python fold (ann_topk's _fold_dot convention, ADVICE
-    r13): numpy's pairwise ((c-q)**2).sum() can differ from Spark's
+    a SEQUENTIAL Python fold (the ``_lsh_probe_buckets`` convention,
+    ADVICE r13): numpy's pairwise ((c-q)**2).sum() can differ from Spark's
     left-to-right F.aggregate by an ulp BEFORE rounding, and a 6dp
     boundary value would then round to a different cell than the batch
     path probes."""
@@ -1486,6 +1324,41 @@ def pq_encode(
     return df.withColumn("pq_codes", codes)
 
 
+def _adc_table(
+    codebook: list[list[list[float]]], query: list[float], name: str = "query"
+) -> list[list[float]]:
+    """The m×k partial-distance table of one UNquantized query:
+    ``table[s][c] = ‖q_s − codebook[s][c]‖²``, unrounded (only the
+    final ADC sum is rounded). It depends only on the literal query and
+    codebook — index metadata, not data — so the ADC operators bake it
+    into the plan as literals."""
+    m = len(codebook)
+    sub = len(codebook[0][0])
+    if len(query) != m * sub:
+        raise ValueError(f"{name} dim {len(query)} != {m * sub}")
+    return [
+        [
+            sum((query[s * sub + j] - codebook[s][c][j]) ** 2 for j in range(sub))
+            for c in range(len(codebook[s]))
+        ]
+        for s in range(m)
+    ]
+
+
+def _adc_fold(table: Column, m: int) -> Column:
+    """In-row asymmetric distance ``Σ_s table[s][pq_codes[s]]`` — an
+    O(m) fold of element_at lookups into a literal partial-distance
+    table by code."""
+    return F.aggregate(
+        F.sequence(F.lit(1), F.lit(m)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.element_at(table, s), F.element_at(F.col("pq_codes"), s) + 1
+        ),
+    )
+
+
 def pq_adc_topk(
     encoded: DataFrame,
     codebook: list[list[list[float]]],
@@ -1505,32 +1378,11 @@ def pq_adc_topk(
     TakeOrderedAndProject: zero shuffles, zero joins, never touches the
     raw vectors. ``adc_dist`` is rounded to 6dp with an id tie-break
     (the cross-engine ranking contract)."""
-    m = len(codebook)
-    sub = len(codebook[0][0])
-    if len(query) != m * sub:
-        raise ValueError(f"query dim {len(query)} != {m * sub}")
-    table = [
-        [
-            sum(
-                (query[s * sub + j] - codebook[s][c][j]) ** 2 for j in range(sub)
-            )
-            for c in range(len(codebook[s]))
-        ]
-        for s in range(m)
-    ]
     # ONE SQL string for the m×k literal table (the sig_sql convention)
     # — Column-by-Column construction costs a py4j round trip per
     # literal and dominates driver time at production k
-    lit_table = F.expr(_lit_double_matrix_sql(table))
-    adc = F.aggregate(
-        F.sequence(F.lit(1), F.lit(m)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(lit_table, s),
-            F.element_at(F.col("pq_codes"), s) + 1,
-        ),
-    )
+    lit_table = F.expr(_lit_double_matrix_sql(_adc_table(codebook, query)))
+    adc = _adc_fold(lit_table, len(codebook))
     return (
         encoded.select(id_col, F.round(adc, 6).alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
@@ -1562,24 +1414,7 @@ def pq_adc_batch_topk(
         # two tables under one query_id would rank their interleaved
         # candidates in ONE window — mixed ids under ranks 1..k, no error
         raise ValueError(f"pq_adc_batch_topk: duplicate query ids {qids}")
-    m = len(codebook)
-    sub = len(codebook[0][0])
-    tables = []
-    for qid, q in queries:
-        if len(q) != m * sub:
-            raise ValueError(f"query {qid}: dim {len(q)} != {m * sub}")
-        tables.append(
-            [
-                [
-                    sum(
-                        (q[s * sub + j] - codebook[s][c][j]) ** 2
-                        for j in range(sub)
-                    )
-                    for c in range(len(codebook[s]))
-                ]
-                for s in range(m)
-            ]
-        )
+    tables = [_adc_table(codebook, q, f"query {qid}") for qid, q in queries]
     # nq × m × k literals as ONE SQL string (the sig_sql convention): a
     # 100-query × 8×256 batch is ~205k literals — Column-by-Column
     # construction would spend minutes of driver py4j time before the
@@ -1593,22 +1428,13 @@ def pq_adc_batch_topk(
         "array(" + ",".join(str(int(qid)) for qid, _ in queries) + ")"
     )
 
-    def adc_for(qi: Column) -> Column:
-        qt = F.element_at(lit_tables, qi)
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(m)),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + F.element_at(
-                F.element_at(qt, s), F.element_at(F.col("pq_codes"), s) + 1
-            ),
-        )
-
     pairs = F.transform(
         F.sequence(F.lit(1), F.lit(len(queries))),
         lambda qi: F.struct(
             F.element_at(lit_qids, qi).alias("query_id"),
-            F.round(adc_for(qi), 6).alias("adc_dist"),
+            F.round(
+                _adc_fold(F.element_at(lit_tables, qi), len(codebook)), 6
+            ).alias("adc_dist"),
         ),
     )
     scored = encoded.select(

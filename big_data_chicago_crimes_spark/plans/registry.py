@@ -42,7 +42,7 @@ REGISTRY: dict[str, Query] = {}
 # indexes 0-49). ``CERTIFICATION_PRIORITY`` pins iteration order so the
 # sample window is always spent where evidence is weakest.
 #
-# Rotation rule: the 100 queries form two cohorts of 50 that alternate in
+# Rotation rule: the 99 queries form two cohorts (50 and 49) that alternate in
 # the window, so no query's last correctness row is more than two rounds old
 # (tests/test_registry.py derives that contract from the committed
 # CORRECTNESS history, so a bad rotation fails CI). Within a cohort,
@@ -124,7 +124,6 @@ CERTIFICATION_PRIORITY: tuple[str, ...] = (
     "docs_stratified_sample",
     "docs_heavy_hitters_cms",
     "docs_line_dedup",  # C4-style line-level boilerplate removal
-    "embedding_semantic_dedup",  # SemDeDup cluster-scoped pruning
     "events_etl_clean_seeded",
     "events_dedup_keyed",
     "events_csv_roundtrip",

@@ -21,8 +21,8 @@ from big_data_chicago_crimes_spark.sources.readers import load_tables
     # the three global Pearson pairs, r7-green) folds into this SAME
     # single-pass rollup aggregate: corr() rides the existing groups and
     # the grand-total row carries the identical global values. One scan
-    # and one aggregate instead of two; the slot freed funds
-    # embedding_semantic_dedup. The 4×4 matrix form (ml_correlation_matrix)
+    # and one aggregate instead of two; the slot freed funds SemDeDup
+    # (embedding_semantic_dedup_vec). The 4×4 matrix form (ml_correlation_matrix)
     # still certifies M13's matrix surface separately.
     # r10 adjudication (interleaved A/B; the r9 merge cost is in
     # BENCH_ATTRIBUTION_r09.md): at sf0.1 the merged form measures

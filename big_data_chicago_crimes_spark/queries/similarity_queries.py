@@ -290,24 +290,17 @@ def embedding_ann_lsh_topk_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiprobe LSH ANN against the MATERIALIZED bucket-partitioned
     index: the Hamming-1 probe set becomes a partition-pruned scan of
     ~9/256 of the table (PartitionFilters, no signature recompute)."""
-    import itertools
-
-    import numpy as np
-
     from big_data_chicago_crimes_spark.operators.similarity import (
-        _hyperplanes,
+        _lsh_probe_buckets,
         cosine_topk,
     )
 
     t = load_tables(spark, sf_dir)
     qvec = _query_vec(t)
-    planes = _hyperplanes(_EMB_DIM, 8)
-    dots = planes @ np.asarray(qvec, dtype=float)
-    q_bucket = int(sum((1 << i) for i, d in enumerate(dots) if d > 0))
-    probes = {q_bucket} | {q_bucket ^ (1 << b) for b in range(8)}
     lake = _lsh_lake(spark, sf_dir)
     candidates = lake.filter(
-        F.col("bucket").isin(sorted(probes)) & (F.col("vec_id") != _QUERY_VEC_ID)
+        F.col("bucket").isin(_lsh_probe_buckets(qvec, n_planes=8))
+        & (F.col("vec_id") != _QUERY_VEC_ID)
     )
     return cosine_topk(candidates, qvec, k=10)
 
@@ -366,25 +359,22 @@ def _ivf_lake(
 
 
 def _ivf_probe(spark: SparkSession, sf_dir: str, seeded: bool) -> DataFrame:
-    """The IVF query plan both lake variants share: rank the 16 stored
-    centroids driver-side (index metadata, not data), scan only the 4
-    nearest inverted lists via partition pruning, exact cosine re-rank."""
-    import numpy as np
+    """The IVF query plan both lake variants share: ``ivf_topk`` ranks
+    the 16 stored centroids driver-side (index metadata, not data),
+    scans only the 4 nearest inverted lists via partition pruning, and
+    re-ranks by exact cosine."""
+    from big_data_chicago_crimes_spark.operators.similarity import ivf_topk
 
-    from big_data_chicago_crimes_spark.operators.similarity import cosine_topk
-
-    t = load_tables(spark, sf_dir)
-    qvec = _query_vec(t)
+    qvec = _query_vec(load_tables(spark, sf_dir))
     lists, cent_df = _ivf_lake(spark, sf_dir, seeded=seeded)
-    q = np.asarray(qvec, dtype=float)
-    cents = {r["centroid_id"]: r["centroid"] for r in cent_df.collect()}  # 16 rows
-    probe_ids = sorted(
-        cents, key=lambda i: float(np.linalg.norm(np.asarray(cents[i]) - q))
-    )[:4]
-    candidates = lists.filter(
-        F.col("centroid_id").isin(probe_ids) & (F.col("vec_id") != _QUERY_VEC_ID)
+    rows = sorted(cent_df.collect(), key=lambda r: r["centroid_id"])  # 16 rows
+    return ivf_topk(
+        lists.filter(F.col("vec_id") != _QUERY_VEC_ID),
+        [r["centroid"] for r in rows],
+        qvec,
+        k=10,
+        nprobe=4,
     )
-    return cosine_topk(candidates, qvec, k=10)
 
 
 @register(
@@ -1318,10 +1308,10 @@ def _semantic_dedup_oracle() -> str:
 
 
 def _sem_planted_corpus(t) -> tuple[DataFrame, DataFrame]:
-    """(organics, planted corpus) shared by the expression-form and
-    vectorized SemDeDup certification queries — every 20th vector
-    spawns an exact twin (cosine 1.0), every ≡10 (mod 20) vector a
-    first-coordinate sign-flip twin straddling the 0.95 threshold."""
+    """(organics, planted corpus) for the SemDeDup certification
+    query — every 20th vector spawns an exact twin (cosine 1.0), every
+    ≡10 (mod 20) vector a first-coordinate sign-flip twin straddling
+    the 0.95 threshold."""
     e = t.embeddings.select("vec_id", "embedding")
     exact_twins = e.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
@@ -1368,87 +1358,38 @@ def _sem_planted_batch(e: DataFrame) -> DataFrame:
 
 
 @register(
-    "embedding_semantic_dedup",
-    # funded by folding lineitem_correlations into lineitem_rollup's
-    # aggregate (olap_queries.py). EXACT MEMBERSHIP certification: the
-    # kept (vec_id, centroid_id) rows themselves are the result, so the
-    # driver hash pins every assignment AND every prune decision.
+    "embedding_semantic_dedup_vec",
+    # Funded by folding docs_simhash_md5_oracled into
+    # docs_simhash_band_candidates_md5_oracled (→ docs_sketch_md5_surface,
+    # dedup_queries.py). The oracle is construction-independent — it
+    # replays the membership DEFINITION in SQL — so it certifies the
+    # BLAS-vectorized builders under the driver hash, not just under
+    # local model tests.
     oracle=_semantic_dedup_oracle(),
-    tags=("similarity", "dedup", "semantic", "clustering", "extension"),
+    tags=("similarity", "dedup", "semantic", "clustering", "vectorized", "extension"),
 )
-def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_semantic_dedup_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over a planted corpus: assign every
     vector to its nearest literal-codebook centroid, prune any vector
     whose cluster holds a smaller-id member at rounded cosine >= 0.95
-    (operators/similarity.py:semantic_dedup). Every 20th vector spawns
-    an exact twin (pruned: cosine 1.0, same cell); vectors ≡10 (mod 20)
+    (operators/similarity.py:semantic_dedup_vectorized — one BLAS gram
+    per cell inside ``applyInPandas``). Every 20th vector spawns an
+    exact twin (pruned: cosine 1.0, same cell); vectors ≡10 (mod 20)
     spawn a first-coordinate sign-flip twin whose cosine to its source
     is 1 − 2·v₁²/‖v‖² — individually above or below the threshold, so
     the prune frontier itself is certified; all organic pairs are kept
     (fixture max organic cosine ≈ 0.51).
 
-    Second leg (``leg='incr'``, r9): the kept set becomes the INDEX and
-    a planted crawl batch runs
+    Second leg (``leg='incr'``, r9): the kept set becomes a stored-norm
+    ``semantic_survivor_index`` and a planted crawl batch runs
     operators/similarity.py:incremental_semantic_dedup — exact twins of
     ≡5 (mod 20) organics certify the index-hit prune, negated ≡7
     organics (cosine −1 to their source) certify the novel keep path,
     and two negated copies of each ≡13 organic certify the in-batch
     any-smaller-id rule. The driver hash pins both legs' exact
-    membership."""
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        incremental_semantic_dedup,
-        literal_centroids,
-        semantic_dedup,
-        semantic_survivor_index,
-    )
-
-    t = load_tables(spark, sf_dir)
-    e, corpus = _sem_planted_corpus(t)
-    cents = literal_centroids(_IVF_LIT_K, _EMB_DIM)
-    kept = semantic_dedup(corpus, cents, threshold=_SEM_THRESHOLD)
-
-    # Incremental leg (r9): the kept set becomes the INDEX through the
-    # canonical survivor-index path (stored norms — the fast per-batch
-    # form is the default, VERDICT r9 #4), and a planted crawl batch
-    # exercises all three paths of
-    # operators/similarity.py:incremental_semantic_dedup.
-    index = semantic_survivor_index(corpus, kept)
-    inc_kept = incremental_semantic_dedup(
-        _sem_planted_batch(e), index, cents, threshold=_SEM_THRESHOLD
-    )
-    return (
-        kept.select(F.lit("full").alias("leg"), "vec_id", "centroid_id")
-        .unionByName(
-            inc_kept.select(F.lit("incr").alias("leg"), "vec_id", "centroid_id")
-        )
-        .orderBy("leg", "vec_id")
-    )
-
-
-@register(
-    "embedding_semantic_dedup_vec",
-    # Funded by folding docs_simhash_md5_oracled into
-    # docs_simhash_band_candidates_md5_oracled (→ docs_sketch_md5_surface,
-    # dedup_queries.py). The oracle is construction-independent — it
-    # replays the membership DEFINITION in SQL — so reusing it against
-    # the BLAS-vectorized builders certifies their exact equality under
-    # the driver hash, not just under local equality tests.
-    oracle=_semantic_dedup_oracle(),
-    tags=("similarity", "dedup", "semantic", "clustering", "vectorized", "extension"),
-)
-def embedding_semantic_dedup_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION SemDeDup path under the driver hash (VERDICT r9
-    #2): same planted corpus, crawl batch, threshold, and full-membership
-    oracle as ``embedding_semantic_dedup``, built with the forms that
-    measured FLAT at 10× data under the k ∝ N contract —
-    ``semantic_dedup_vectorized`` (one BLAS gram per cell inside
-    ``applyInPandas``) for the full leg, and
-    ``incremental_semantic_dedup(vectorized_assign=True)`` probing a
-    stored-norm ``semantic_survivor_index`` for the incremental leg. A
-    green row means zero production paths without driver evidence: the
-    vectorized assignment (rounded-distance argmin, cid tie-break), the
-    per-cell gram pruning, and the normed-index probe all reproduce the
-    SQL-replayed membership bit-for-bit."""
+    membership: the vectorized assignment (rounded-distance argmin, cid
+    tie-break), the per-cell gram pruning, and the normed-index probe
+    all reproduce the SQL-replayed membership bit-for-bit."""
     from big_data_chicago_crimes_spark.operators.similarity import (
         incremental_semantic_dedup,
         literal_centroids,
@@ -1467,11 +1408,7 @@ def embedding_semantic_dedup_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = scratch_persist(semantic_dedup_vectorized(corpus, cents, threshold=_SEM_THRESHOLD))
     index = semantic_survivor_index(corpus, kept)
     inc_kept = incremental_semantic_dedup(
-        _sem_planted_batch(e),
-        index,
-        cents,
-        threshold=_SEM_THRESHOLD,
-        vectorized_assign=True,
+        _sem_planted_batch(e), index, cents, threshold=_SEM_THRESHOLD
     )
     return (
         kept.select(F.lit("full").alias("leg"), "vec_id", "centroid_id")

@@ -20,20 +20,11 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    bucket_by: tuple[int, list[str]] | None = None,
 ) -> None:
-    """Parquet sink. ``partition_by`` gives partition pruning on read;
-    ``bucket_by`` (with saveAsTable) gives shuffle-free co-located joins."""
+    """Parquet sink. ``partition_by`` gives partition pruning on read."""
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if bucket_by:
-        n, cols = bucket_by
-        # bucketBy requires a table sink (metastore-tracked layout)
-        writer.bucketBy(n, *cols).sortBy(*cols).option("path", path).saveAsTable(
-            path.rstrip("/").rsplit("/", 1)[-1]
-        )
-        return
     writer.parquet(path)
 
 

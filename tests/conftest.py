@@ -8,6 +8,7 @@ import math
 import os
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -76,3 +77,25 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
                 assert str(xn) == str(yn), (
                     f"{name}: value mismatch col={c} row={i}: {x!r} != {y!r}"
                 )
+
+
+def semantic_dedup_model(rows, cents, threshold=0.95):
+    """NumPy model of SemDeDup membership: each vector joins the
+    centroid at the smallest 6dp-rounded squared L2 distance (smallest
+    cid on ties) and is pruned when any smaller-id member of its cell
+    has 6dp-rounded cosine >= ``threshold`` (zero-norm vectors cos as
+    0.0). Vectors are float32-cast first, as the array<float> column
+    stores them. Returns the sorted kept (vec_id, centroid_id) pairs."""
+    ids = np.asarray([i for i, _ in rows])
+    vecs = np.asarray([v for _, v in rows], dtype=np.float32).astype(float)
+    c = np.asarray(cents, dtype=float)
+    cell = np.round(((vecs[:, None, :] - c[None]) ** 2).sum(axis=-1), 6).argmin(axis=1)
+    norms = np.linalg.norm(vecs, axis=1)
+    denom = np.outer(norms, norms)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.round(np.where(denom > 0, (vecs @ vecs.T) / denom, 0.0), 6)
+    return sorted(
+        (int(ids[a]), int(cell[a]))
+        for a in range(len(ids))
+        if not (cos[a][(cell == cell[a]) & (ids < ids[a])] >= threshold).any()
+    )

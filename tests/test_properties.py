@@ -315,29 +315,26 @@ def test_pack_bins_match_python_contiguous_fill(spark, items, capacity):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_semantic_dedup_vectorized_property_equality(spark, vecs, k, zero_rows):
-    """The BLAS form of SemDeDup agrees with the certified
-    column-expression form on arbitrary small corpora and codebooks —
+    """The BLAS form of SemDeDup agrees with a NumPy model of its
+    membership rule on arbitrary small corpora and codebooks —
     including all-zero vectors and duplicate rows hypothesis likes to
-    plant. Both forms round cosines and centroid distances to 6dp
-    before comparing, so agreement here pins the portability contract,
-    not float luck."""
+    plant (the model is ``tests.conftest.semantic_dedup_model``)."""
     import numpy as np
 
     from big_data_chicago_crimes_spark.operators.similarity import (
-        semantic_dedup,
         semantic_dedup_vectorized,
     )
-    from big_data_chicago_crimes_spark.session import release_scratch_caches
+    from tests.conftest import semantic_dedup_model
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     rows += [(1000 + i, [0.0, 0.0, 0.0, 0.0]) for i in range(zero_rows)]
     rng = np.random.RandomState(k)
     cents = [[float(x) for x in rng.randn(4)] for _ in range(k)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    h = sorted(semantic_dedup(df, cents, threshold=0.95).collect())
-    release_scratch_caches()
-    v = sorted(semantic_dedup_vectorized(df, cents, threshold=0.95).collect())
-    assert h == v
+    got = sorted(
+        tuple(r) for r in semantic_dedup_vectorized(df, cents, threshold=0.95).collect()
+    )
+    assert got == semantic_dedup_model(rows, cents, threshold=0.95)
 
 
 @SETTINGS

@@ -128,9 +128,17 @@ def test_lsh_multiprobe_radius_widens_probe_set(spark, sf_dir):
 def test_lake_ann_partition_pruned_and_matches_in_query_path(spark, sf_dir, tmp_path):
     """The registered lake ANN paths (VERDICT r2 #2): the scan must carry
     a PartitionFilters entry on the partition key (bucket / centroid_id),
-    and the LSH lake result must equal the in-query multiprobe variant
-    row-for-row (same oracle SQL backs both)."""
+    the LSH lake result must equal the in-query multiprobe variant
+    row-for-row (same oracle SQL backs both), and the IVF lake must
+    probe the cells ``nearest_centroid_cells`` ranks for the query."""
+    import re
+
+    from big_data_chicago_crimes_spark.operators.similarity import (
+        nearest_centroid_cells,
+    )
     from big_data_chicago_crimes_spark.plans.registry import all_queries
+    from big_data_chicago_crimes_spark.sources.readers import load_tables
+    from big_data_chicago_crimes_spark.sources.sinks import lake_root
 
     qs = all_queries()
     spark.conf.set("spark.bdcc.lakeDir", str(tmp_path / "lake"))
@@ -153,6 +161,25 @@ def test_lake_ann_partition_pruned_and_matches_in_query_path(spark, sf_dir, tmp_
         ivf_lake = qs["embedding_ivf_topk_lake"].build(spark, sf_dir)
         plan = ivf_lake._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "centroid_id" in plan
+        # the probed cells are the ones nearest_centroid_cells ranks
+        # for the query row against the stored centroids
+        probed = re.search(r"centroid_id#\d+ IN \(([\d,]+)\)", plan).group(1)
+        cents = [
+            r.centroid
+            for r in spark.read.parquet(
+                f"{lake_root(spark, sf_dir)}/embeddings_ivf_centroids"
+            )
+            .orderBy("centroid_id")
+            .collect()
+        ]
+        expect = (
+            load_tables(spark, sf_dir)
+            .embeddings.filter("vec_id = 0")
+            .select(nearest_centroid_cells("embedding", cents, 4).alias("c"))
+            .head()
+            .c
+        )
+        assert sorted(int(c) for c in probed.split(",")) == sorted(expect)
         rows = ivf_lake.collect()
         assert 0 < len(rows) <= 10
         assert all(-1.0 <= r.cosine <= 1.0 for r in rows)
@@ -200,6 +227,53 @@ def test_hyperplane_tables_independent_and_table0_stable():
     assert np.allclose(p0, np.random.RandomState(_LSH_SEED).randn(4, 16))
     p1, p2 = _hyperplanes(16, 4, table=1), _hyperplanes(16, 4, table=2)
     assert not np.allclose(p0, p1) and not np.allclose(p1, p2)
+
+
+def test_driver_probe_rules_match_plan_expressions(spark):
+    """The driver-side probe rules pick what the plan expressions pick:
+    ``_lsh_probe_buckets`` returns the ``hyperplane_signature`` bucket
+    for random vectors AND for vectors projected onto a plane (plane
+    dot ~0, where a BLAS dot's summation order can flip the sign), and
+    ``_rank_probe_cells`` returns the ``nearest_centroid_cells`` ranking
+    for random vectors and for centroid midpoints (equidistant cells,
+    ordered by cid)."""
+    import numpy as np
+
+    from big_data_chicago_crimes_spark.operators.similarity import (
+        _hyperplanes,
+        _lsh_probe_buckets,
+        _rank_probe_cells,
+        hyperplane_signature,
+        literal_centroids,
+        nearest_centroid_cells,
+    )
+
+    dim, n_planes = 64, 8
+    rng = np.random.RandomState(5)
+    vecs = [rng.randn(dim) for _ in range(16)]
+    planes = np.tile(_hyperplanes(dim, n_planes), (2, 1))  # one per vector
+    projected = [v - (v @ p) / (p @ p) * p for v, p in zip(vecs, planes)]
+    assert all(abs(v @ p) < 1e-12 for v, p in zip(projected, planes))
+    cents = literal_centroids(16, dim)
+    midpoints = [
+        (np.asarray(cents[a]) + np.asarray(cents[b])) / 2
+        for a, b in [(0, 1), (2, 7), (3, 15), (9, 4)]
+    ]
+    rows = [
+        (i, [float(x) for x in v])
+        for i, v in enumerate(vecs + projected + midpoints)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = df.select(
+        "vec_id",
+        hyperplane_signature("embedding", dim, n_planes).alias("bucket"),
+        nearest_centroid_cells("embedding", cents, 4).alias("cells"),
+    ).collect()
+    vec_of = dict(rows)
+    for r in got:
+        q = vec_of[r.vec_id]
+        assert _lsh_probe_buckets(q, n_planes, 0) == [r.bucket], r.vec_id
+        assert _rank_probe_cells(q, cents, 4) == list(r.cells), r.vec_id
 
 
 def test_lsh_near_dup_pairs_recall_on_noisy_twins(spark):
@@ -392,7 +466,9 @@ def test_semantic_dedup_semantics(spark):
     and sub-threshold cluster-mates are kept."""
     import math
 
-    from big_data_chicago_crimes_spark.operators.similarity import semantic_dedup
+    from big_data_chicago_crimes_spark.operators.similarity import (
+        semantic_dedup_vectorized,
+    )
 
     cents = [[10.0, 0.0, 0.0], [0.0, 10.0, 0.0]]
     rows = [
@@ -409,7 +485,7 @@ def test_semantic_dedup_semantics(spark):
         "vec_id long, embedding array<float>",
     )
     got = sorted((r.vec_id, r.centroid_id) for r in
-                 semantic_dedup(df, cents, threshold=0.99).collect())
+                 semantic_dedup_vectorized(df, cents, threshold=0.99).collect())
 
     def cos(a, b):
         d = sum(x * y for x, y in zip(a, b))
@@ -434,25 +510,27 @@ def test_semantic_dedup_semantics(spark):
     assert {1, 4, 5, 7} <= set(kept_ids)
 
 
-def test_semantic_dedup_vectorized_matches_pair_join_form(spark):
-    """The BLAS per-cell form (applyInPandas gram matrix) is
-    output-identical to the certified pair-join form on organic
-    embeddings AND on a planted fixture covering the edge semantics:
-    exact twins, scale-invariant twins (cos exactly 1 after
-    normalization), zero vectors (cos defined as 0.0 — never pruned,
-    never pruning), and cross-cell near-dups (never compared)."""
+def test_semantic_dedup_vectorized_matches_numpy_model(spark):
+    """The BLAS per-cell form (applyInPandas gram matrix) returns the
+    NumPy model's membership on organic embeddings AND on a planted
+    fixture covering the edge semantics: exact twins, scale-invariant
+    twins (cos exactly 1 after normalization), zero vectors (cos
+    defined as 0.0 — never pruned, never pruning), and cross-cell
+    near-dups (never compared). The expression and vectorized
+    centroid assignments agree on the organic corpus."""
     import numpy as np
 
     from big_data_chicago_crimes_spark.operators.similarity import (
         assign_to_centroids,
         assign_to_centroids_vectorized,
         literal_centroids,
-        semantic_dedup,
         semantic_dedup_vectorized,
     )
-    from big_data_chicago_crimes_spark.session import release_scratch_caches
+    from tests.conftest import semantic_dedup_model
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
     dim = len(emb.select("embedding").first()[0])
     cents = literal_centroids(8, dim)
 
@@ -460,16 +538,15 @@ def test_semantic_dedup_vectorized_matches_pair_join_form(spark):
         assign_to_centroids(emb, cents).select("vec_id", "centroid_id").collect()
     )
     b = sorted(
-        assign_to_centroids_vectorized(emb.select("vec_id", "embedding"), cents)
+        assign_to_centroids_vectorized(emb, cents)
         .select("vec_id", "centroid_id")
         .collect()
     )
     assert a == b
 
-    h = sorted(semantic_dedup(emb, cents).collect())
-    release_scratch_caches()
-    v = sorted(semantic_dedup_vectorized(emb, cents).collect())
-    assert h == v
+    organic = [(r.vec_id, list(r.embedding)) for r in emb.collect()]
+    v = sorted(tuple(r) for r in semantic_dedup_vectorized(emb, cents).collect())
+    assert v == semantic_dedup_model(organic, cents)
 
     rng = np.random.RandomState(7)
     rows = [(i, [float(x) for x in rng.randn(dim)]) for i in range(40)]
@@ -478,11 +555,9 @@ def test_semantic_dedup_vectorized_matches_pair_join_form(spark):
     rows.append((102, [0.0] * dim))                    # second zero vector
     rows.append((103, [x * 2.0 for x in rows[5][1]]))  # scaled twin of 5
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    h2 = sorted(semantic_dedup(df, cents).collect())
-    release_scratch_caches()
-    v2 = sorted(semantic_dedup_vectorized(df, cents).collect())
-    assert h2 == v2
-    kept = {r.vec_id for r in v2}
+    v2 = sorted(tuple(r) for r in semantic_dedup_vectorized(df, cents).collect())
+    assert v2 == semantic_dedup_model(rows, cents)
+    kept = {vid for vid, _ in v2}
     assert 100 not in kept and 103 not in kept  # twins pruned
     assert {101, 102} <= kept                   # zero vectors kept (cos 0.0)
 
@@ -566,51 +641,6 @@ def test_incremental_semantic_dedup_contract(spark):
     assert {11, 13} <= set(kept)                      # novel survivors
 
 
-def test_incremental_semantic_dedup_vectorized_assign_equal(spark):
-    """vectorized_assign=True (gram-form mapInPandas assignment) returns
-    the same survivors as the portable expression form, and a stored
-    ``norm`` column on the index changes nothing but the plan."""
-    import numpy as np
-
-    from big_data_chicago_crimes_spark.functions.vectors import l2_norm
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        assign_to_centroids,
-        incremental_semantic_dedup,
-        literal_centroids,
-    )
-
-    dim = 8
-    cents = literal_centroids(4, dim)
-    rng = np.random.RandomState(11)
-    idx_rows = [(i, [float(x) for x in rng.randn(dim)]) for i in range(30)]
-    idx = assign_to_centroids(
-        spark.createDataFrame(idx_rows, "vec_id long, embedding array<float>"),
-        cents,
-    )
-    batch_rows = [(100 + i, [float(x) for x in rng.randn(dim)]) for i in range(20)]
-    batch_rows.append((200, idx_rows[4][1]))   # index twin -> pruned
-    batch_rows.append((201, batch_rows[2][1])) # in-batch twin -> pruned
-    batch = spark.createDataFrame(batch_rows, "vec_id long, embedding array<float>")
-
-    expr = sorted(
-        incremental_semantic_dedup(batch, idx, cents, threshold=0.95).collect()
-    )
-    vec = sorted(
-        incremental_semantic_dedup(
-            batch, idx, cents, threshold=0.95, vectorized_assign=True
-        ).collect()
-    )
-    with_norm = idx.withColumn("norm", l2_norm(idx["embedding"]))
-    vec_norm = sorted(
-        incremental_semantic_dedup(
-            batch, with_norm, cents, threshold=0.95, vectorized_assign=True
-        ).collect()
-    )
-    assert expr == vec == vec_norm
-    kept = {r.vec_id for r in vec}
-    assert 200 not in kept and 201 not in kept
-
-
 def test_semantic_survivor_index_stores_norm_and_engages(spark):
     """The canonical survivor-index path stores a ``norm`` column by
     default (VERDICT r9 #4), and incremental_semantic_dedup actually
@@ -620,7 +650,7 @@ def test_semantic_survivor_index_stores_norm_and_engages(spark):
     from big_data_chicago_crimes_spark.operators.similarity import (
         incremental_semantic_dedup,
         literal_centroids,
-        semantic_dedup,
+        semantic_dedup_vectorized,
         semantic_survivor_index,
     )
 
@@ -629,7 +659,7 @@ def test_semantic_survivor_index_stores_norm_and_engages(spark):
     corpus = spark.createDataFrame(
         [(1, [3.0, 0.1, 0.0, 0.0]), (2, [0.1, 3.0, 0.0, 0.0])], schema
     )
-    kept = semantic_dedup(corpus, cents, threshold=0.99)
+    kept = semantic_dedup_vectorized(corpus, cents, threshold=0.99)
     index = semantic_survivor_index(corpus, kept)
     assert "norm" in index.columns  # stored by default, not opt-in
     import math
@@ -950,7 +980,7 @@ def test_survivor_index_accepts_pre_assigned_corpus(spark):
     from big_data_chicago_crimes_spark.operators.similarity import (
         assign_to_centroids,
         literal_centroids,
-        semantic_dedup,
+        semantic_dedup_vectorized,
         semantic_survivor_index,
     )
 
@@ -960,42 +990,10 @@ def test_survivor_index_accepts_pre_assigned_corpus(spark):
         "vec_id long, embedding array<float>",
     )
     pre_assigned = assign_to_centroids(corpus, cents)
-    kept = semantic_dedup(corpus, cents)
+    kept = semantic_dedup_vectorized(corpus, cents)
     idx = semantic_survivor_index(pre_assigned, kept)
     assert set(idx.columns) == {"vec_id", "embedding", "norm", "centroid_id"}
     assert idx.count() == kept.count()
-
-
-def test_nearest_centroid_cells_sql_form_matches_column_form(spark, sf_dir):
-    """The fast-planning SQL-string form must produce BIT-IDENTICAL cell
-    rankings to the Column/HOF form on real vectors, for both the
-    full-dim and the PQ offset-slice shapes (the r14 rewrite's
-    zip_with NULL-padding bug would have flipped ~40% of codes)."""
-    from pyspark.sql import functions as F
-
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        literal_centroids,
-        nearest_centroid_cells,
-        pq_codebook,
-    )
-    from big_data_chicago_crimes_spark.sources.readers import load_tables
-
-    emb = load_tables(spark, sf_dir).embeddings
-    cents = literal_centroids(8, 64)
-    full = emb.select(
-        nearest_centroid_cells("embedding", cents, 3).alias("a"),
-        nearest_centroid_cells(F.col("embedding"), cents, 3).alias("b"),
-    )
-    assert full.filter(F.col("a") != F.col("b")).count() == 0
-
-    book = pq_codebook(4, 8, 64)
-    sliced = emb.select(
-        nearest_centroid_cells("embedding", book[2], 2, offset=2 * 16).alias("a"),
-        nearest_centroid_cells(
-            F.slice(F.col("embedding"), 2 * 16 + 1, 16), book[2], 2
-        ).alias("b"),
-    )
-    assert sliced.filter(F.col("a") != F.col("b")).count() == 0
 
 
 def test_ivf_pq_topk_planted_duplicates_rank_first(spark):
@@ -1041,25 +1039,6 @@ def test_ivf_pq_topk_planted_duplicates_rank_first(spark):
         ).collect()
     }
     assert cells <= probe
-
-
-def test_hyperplane_signature_sql_form_matches_column_form(spark, sf_dir):
-    """The one-SQL-string signature must equal the Column-built form
-    bit-for-bit on real vectors, for both plane tables."""
-    from pyspark.sql import functions as F
-
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        hyperplane_signature,
-    )
-    from big_data_chicago_crimes_spark.sources.readers import load_tables
-
-    emb = load_tables(spark, sf_dir).embeddings
-    for t in (0, 1):
-        both = emb.select(
-            hyperplane_signature("embedding", 64, 8, table=t).alias("a"),
-            hyperplane_signature(F.col("embedding"), 64, 8, table=t).alias("b"),
-        )
-        assert both.filter(F.col("a") != F.col("b")).count() == 0
 
 
 def test_cross_encoder_rerank_parity_and_edges(spark):
