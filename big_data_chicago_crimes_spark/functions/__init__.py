@@ -9,7 +9,6 @@ from big_data_chicago_crimes_spark.functions.text import (
     bpe_ish_token_count,
     char_ngrams,
     doc_fingerprint,
-    lang_id_scores,
     pii_counts,
     punct_ratio,
     quality_score,
@@ -36,7 +35,6 @@ __all__ = [
     "quality_score",
     "rolling_hash",
     "doc_fingerprint",
-    "lang_id_scores",
     "pii_counts",
     "punct_ratio",
     "redact_pii",

@@ -104,37 +104,6 @@ def quality_score(text: Column | str) -> Column:
     return F.round((len_score + sw_score + p_score) / F.lit(3.0), 6)
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language marker-token hit counts."""
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-    return out
-
-
-def lang_id_scores(text: Column | str) -> Column:
-    """Predicted language code by marker-vote argmax; 'und' when no
-    marker fires. Ties break by language-code order (deterministic)."""
-    scores = lang_scores(text)
-    # struct sort: (-score, lang) ascending → first element is argmax
-    entries = F.array(
-        *[
-            F.struct((-scores[lang]).alias("neg"), F.lit(lang).alias("lang"))
-            for lang in sorted(LANG_MARKERS)
-        ]
-    )
-    best = F.array_sort(entries)[0]
-    # NULL text makes every score NULL (ANSI size(null) = null), so
-    # best['neg'] == 0 evaluates NULL, the when() falls through, and the
-    # tie-break's first language ('de') would be confidently returned —
-    # classify NULL/zero-evidence text as 'und' instead
-    return F.when(
-        (best["neg"] == 0) | best["neg"].isNull(), F.lit("und")
-    ).otherwise(best["lang"])
-
-
 def casefold_ws_normalize(text: Column | str) -> Column:
     """Casefolded, whitespace-collapsed text — the ONE normalization
     doc_fingerprint and char_ngrams share (dedup.py documents that the

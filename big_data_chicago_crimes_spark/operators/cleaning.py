@@ -35,20 +35,14 @@ EXCLUDED_PRIMARY_TYPES = [
 
 
 def null_count_exprs(columns: list[str], prefix: str = "") -> list:
-    """The A1 per-column null-count aggregate expressions, exposed so a
-    grouped/ROLLUP aggregate can ride them in the same pass as other
-    stats (the events_type_stats_census merge) — the grand-total row of
-    such a rollup carries exactly the global census ``null_census``
-    returns."""
+    """The A1 per-column null-count aggregate expressions (Dataset.py:79),
+    exposed so a grouped/ROLLUP aggregate can ride them in the same pass
+    as other stats (events_type_stats_census) — the grand-total row of
+    such a rollup carries the global census; ``df.select(...)`` of them
+    alone is the one-row census."""
     return [
         F.sum(F.col(c).isNull().cast("int")).alias(f"{prefix}{c}") for c in columns
     ]
-
-
-def null_census(df: DataFrame) -> DataFrame:
-    """Per-column null counts in one global aggregate (A1, Dataset.py:79).
-    One pass, partial+final agg planned by Catalyst — no per-column jobs."""
-    return df.select(null_count_exprs(df.columns))
 
 
 def drop_null_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:

@@ -3,7 +3,7 @@
 The reference trains four models (logistic regression, random forest,
 GBT regression, k-means) through hand-inlined StringIndexer →
 VectorAssembler → scaler stages. This module centralizes that as one
-``feature_pipeline`` builder and four seeded model runners, with the
+``_feature_stages`` scaffold and four seeded model runners, with the
 reference's bugs FIXED, not replicated:
 
 1. ``Pipeline().fit(df).transform(df)`` — the reference calls
@@ -111,21 +111,6 @@ def _feature_stages(
             )
         )
     return stages, feature_cols
-
-
-def feature_pipeline(
-    df: DataFrame,
-    label_col: str,
-    exclude: tuple[str, ...] = (),
-    scaler: str = "standard",
-) -> tuple[DataFrame, list[str]]:
-    """Index every string column, assemble numerics + indexed cols,
-    scale — fit AND transformed on ``df`` itself (the reference's shape,
-    bug 1 fixed). For held-out evaluation use
-    :func:`_split_and_featurize`, which fits on the TRAIN split only.
-    Returns (transformed df with 'features' col, feature column names)."""
-    stages, feature_cols = _feature_stages(df, label_col, exclude, scaler)
-    return Pipeline(stages=stages).fit(df).transform(df), feature_cols
 
 
 def _split_and_featurize(
@@ -277,18 +262,6 @@ def pearson_correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.sparkSession.createDataFrame(
         rows, "col_a string, col_b string, corr double"
     )
-
-
-def one_hot_pipeline(df: DataFrame, label_col: str) -> tuple[DataFrame, list[str]]:
-    """Indexer → OneHotEncoder → assembler → scaler (M14: OneHotEncoder
-    is imported but commented out in the reference, Dataset.py:26) —
-    the SAME _feature_stages scaffold as the indexed path with
-    encode='onehot', so the two featurizations share the scaler and
-    cannot drift (the earlier copy had silently dropped the scaler,
-    which made the "only the featurization differs" comparison also a
-    regularization-geometry difference)."""
-    stages, feature_cols = _feature_stages(df, label_col, encode="onehot")
-    return Pipeline(stages=stages).fit(df).transform(df), feature_cols
 
 
 def one_hot_lr_predictions(df: DataFrame, label_col: str) -> DataFrame:

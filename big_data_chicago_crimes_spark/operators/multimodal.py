@@ -130,31 +130,3 @@ def resize_media(df: DataFrame, target_w: int = 224, target_h: int = 224) -> Dat
             yield out
 
     return df.select("doc_id", "payload").mapInPandas(kernel, schema=RESIZED_SCHEMA)
-
-
-FEATURE_SCHEMA = "doc_id long, feature array<float>"
-
-
-def extract_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
-    """Feature-extraction stage: a deterministic byte-value histogram as
-    the stand-in "embedding" (a real pipeline runs a vision/audio model
-    here). Unlike the decode/resize stubs this output is REAL — a
-    normalized n_bins-dim float vector per payload — so downstream
-    similarity/dedup operators can consume it in tests."""
-    import numpy as np
-
-    def kernel(batches):
-        for pdf in batches:
-            feats = []
-            for b in pdf["payload"]:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                if len(arr) == 0:
-                    feats.append([0.0] * n_bins)
-                    continue
-                hist, _ = np.histogram(arr, bins=n_bins, range=(0, 256))
-                feats.append((hist / len(arr)).astype("float32").tolist())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "feature": feats}
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, schema=FEATURE_SCHEMA)

@@ -475,42 +475,6 @@ def _probe_scored_candidates(
     )
 
 
-def incremental_embedding_near_dups(
-    corpus: DataFrame,
-    batch: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 64,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    multiprobe_hamming: int = 1,
-    bucketed: bool = False,
-) -> DataFrame:
-    """Tonight's embedding batch deduped against the existing corpus —
-    the vector counterpart of ``incremental_exact_dedup`` (and the
-    missing half of the incremental-ingest story: exact fingerprints
-    catch byte-identical re-crawls, this catches re-encoded /
-    near-identical content whose vectors still point the same way).
-
-    Same candidate machinery as ``batch_ann_topk`` (probe-set explode on
-    the BATCH side, broadcast, one bucket join — the corpus never
-    shuffles, and against the bucket-partitioned lake the scan is
-    DPP-pruned), but thresholded instead of ranked: returns every
-    (batch_id, corpus_id, cosine ≥ threshold) pair. A batch row with no
-    row in the output is genuinely new — anti-join the ids to keep it.
-    Recall follows the multiprobe geometry (exactly-parallel duplicates
-    share every signature bit, so their recall is 1.0; near-duplicates
-    at cosine ≥ 0.95 collide per the Charikar bound — raise
-    ``multiprobe_hamming`` or probe multiple tables for more)."""
-    scored = _probe_scored_candidates(
-        corpus, batch, dim, n_planes, vec_col, id_col, "batch_id",
-        multiprobe_hamming, bucketed, "incremental_embedding_near_dups",
-    )
-    return scored.filter(F.col("cosine") >= threshold).select(
-        "batch_id", F.col(id_col).alias("corpus_id"), "cosine"
-    )
-
-
 def batch_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1259,8 +1223,7 @@ def pq_codebook(m: int, k: int, dim: int) -> list[list[list[float]]]:
     """Seeded literal product-quantization codebook: ``m`` subspaces ×
     ``k`` sub-centroids × ``dim/m`` floats (the `literal_centroids`
     determinism contract — a FIXED codebook both the Spark plan and an
-    external SQL oracle can bake in as literals; trained codebooks come
-    from :func:`pq_train`)."""
+    external SQL oracle can bake in as literals)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     rng = np.random.RandomState(_LSH_SEED + 2)
@@ -1268,37 +1231,6 @@ def pq_codebook(m: int, k: int, dim: int) -> list[list[list[float]]]:
     return [
         [[float(x) for x in row] for row in rng.randn(k, sub)] for _ in range(m)
     ]
-
-
-def pq_train(
-    df: DataFrame, m: int, k: int, vec_col: str = "embedding"
-) -> list[list[list[float]]]:
-    """Train the codebook: one seeded KMeans per subspace over the
-    sliced sub-vectors (Jégou, Douze & Schmid, "Product quantization
-    for nearest neighbor search", TPAMI 2011). ``m`` sequential MLlib
-    fits, each distributed; the returned codebook is driver-sized
-    (m·k·dim/m floats — index metadata, like ``ivf_index``'s centroid
-    list)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    head = df.select(vec_col).first()
-    if head is None:
-        raise ValueError("pq_train: empty DataFrame — nothing to train on")
-    dim = len(head[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    book = []
-    for s in range(m):
-        sliced = df.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), s * sub + 1, sub).cast("array<double>")
-            ).alias("__sv")
-        )
-        model = KMeans(k=k, seed=_LSH_SEED + s, featuresCol="__sv").fit(sliced)
-        book.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return book
 
 
 def pq_encode(

@@ -693,21 +693,18 @@ def docs_intra_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "docs_stream_static_dedup_batch",
-    # funded by the customer_balance_quartiles + nation_balance_extremes
-    # merge (nation_balance_window_surface). Batch degradation of the
-    # stream-STATIC anti-join dedup (streaming/joins.py:
-    # dedup_stream_against_corpus — the ingest edge of the
-    # foreachBatch loop): the SAME builder runs on batch frames, so the
-    # driver row certifies the anti-join's dedup SEMANTICS, not just
-    # streaming plumbing (VERDICT r8 #5; precedent:
-    # events_interval_join_batch). Batch dropDuplicates keeps an
-    # arbitrary row per fingerprint, so the certified projection is
-    # fingerprint-level: every distinct batch fingerprint with
-    # in_corpus (false ⇔ the builder's anti-join kept it — the survivor
-    # set, exactly the stream-vs-batch equality contract the operator
-    # documents; the min-id keep policy is docs_incremental_dedup's
-    # certified job) and bloom_hit (the r9 bloom-prefilter leg — see
-    # the docstring). Same md5-bucket
+    # Batch degradation of the stream-STATIC anti-join dedup
+    # (streaming/joins.py:dedup_stream_against_corpus — the ingest edge
+    # of a crawl stream): the SAME builder runs on batch frames, so this
+    # row certifies the anti-join's dedup SEMANTICS, not just streaming
+    # plumbing (precedent: events_interval_join_batch). Batch
+    # dropDuplicates keeps an arbitrary row per fingerprint, so the
+    # certified projection is fingerprint-level: every distinct batch
+    # fingerprint with in_corpus (false ⇔ the builder's anti-join kept
+    # it — the survivor set, exactly the stream-vs-batch equality
+    # contract the operator documents; the min-id keep policy is
+    # docs_incremental_dedup's certified job) and bloom_hit (the
+    # bloom-prefilter leg — see the docstring). Same md5-bucket
     # corpus/batch split as docs_incremental_dedup, so the two rows
     # jointly pin that the stream-side fresh set equals the batch
     # pipeline's accepted fingerprints.
@@ -756,7 +753,7 @@ def docs_stream_static_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFram
     index-sized); per micro-batch this is exactly the plan Structured
     Streaming executes — no state store.
 
-    Round-9 bloom leg: each distinct batch fingerprint additionally
+    Bloom leg: each distinct batch fingerprint additionally
     carries ``bloom_hit`` — membership in a bloom filter built over the
     corpus index (operators/dedup.py:bloom_index, 4 bits/key, k=3, md5
     bit positions the oracle replays bit-exactly, modulus = 4·|corpus|

@@ -154,12 +154,13 @@ def ml_classifier_auc_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logistic regression AND random forest AUC on one surface,
     certified as band-check booleans plus degeneracy/discrimination
     checks a constant classifier cannot pass (see module comment).
-    The r10 ``one_hot_lr`` leg runs the M14 OneHotEncoder featurization
+    The ``one_hot_lr`` leg runs the M14 OneHotEncoder featurization
     (StringIndexer → OneHotEncoder → assembler, operators/ml.py
-    ``one_hot_pipeline``) through the same LR + band certification, so
-    the encoder path is driver-gated rather than local-suite-only.
+    ``_feature_stages(encode="onehot")``) through the same LR + band
+    certification, so the encoder path is driver-gated rather than
+    local-suite-only.
 
-    The r12 ``cross_validated_lr`` leg closes M14's second half
+    The ``cross_validated_lr`` leg closes M14's second half
     (CrossValidator + ParamGridBuilder — sketched in comments at
     Dataset.py:615-642 but never run there): a seeded 3-fold CV over
     the LR regularization grid runs end-to-end on BOTH frames. Its

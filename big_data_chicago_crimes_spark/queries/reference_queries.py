@@ -317,13 +317,6 @@ def orders_temporal_bucket_surface(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# events_null_census (reference:A1) merged into events_type_stats_census
-# above (r17) — the rollup grand-total row's n_null_* columns carry the
-# identical global census. The null_census operator stays library
-# surface (operators/cleaning.py, covered by tests/test_cleaning.py)
-# and shares its aggregate expressions with the merged rollup via
-# null_count_exprs.
-
 
 @register(
     "events_dedup_keyed",
@@ -353,22 +346,13 @@ _EVENT_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
 
 @register(
     "events_type_stats_census",
-    # r13 merge: the former event_value_stats (A5 multi-expression
-    # aggregate, r11-green) and distinct_event_types (A8 distinct,
-    # r11-green) in ONE registry slot — the freed slot funds
-    # docs_stratified_sample (the purchaser_error_overlap /
-    # orders_priority_fill_rollup merge-funding pattern). ONE scan, one
-    # ROLLUP aggregate: the per-type rows carry the A5 stats, the
-    # rolled-up row carries the SAME stats globally plus the exact
-    # distinct-type count (A8). grouping() tags the set structurally
-    # (the ADVICE-r12 rule — never discriminate by key null-ness).
-    # r17 merge: the former events_null_census (A1 per-column null
-    # census, r15-green) folds into the SAME rollup as six more
-    # aggregate expressions — the grand-total row's n_null_* columns
-    # ARE the former one-row census, the per-type rows get the census
-    # sliced by type for free. One scan instead of two, zero new
-    # shuffles; the freed slot helps fund the r17 window
-    # (user_session_counts pin + events_join_size_cms).
+    # The A5 multi-expression aggregate, the A8 exact distinct and the
+    # A1 per-column null census in ONE scan, one ROLLUP aggregate: the
+    # per-type rows carry the A5 stats and the census sliced by type,
+    # the rolled-up row carries the SAME stats globally plus the exact
+    # distinct-type count and the global census (six null-count
+    # expressions, zero extra shuffles). grouping() tags the set
+    # structurally — never discriminate by key null-ness.
     oracle="""
         SELECT CASE WHEN GROUPING(event_type) = 1 THEN 'all'
                     ELSE 'by_type' END AS leg,
@@ -393,11 +377,11 @@ def events_type_stats_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-expression aggregate (A5 — the reference's per-district
     centroid agg, Dataset.py:272-276), exact distinct (A8,
     Dataset.py:210), and the per-column null census (A1, Dataset.py:79
-    — operators/cleaning.py:null_count_exprs, the same expressions
-    ``null_census`` plans) in one ROLLUP pass: per-type count +
-    avg/min/max + null-count rows, plus the grand-total row whose
-    ``n_types`` IS the former ``select(col).distinct()`` count and
-    whose ``n_null_*`` columns ARE the former one-row global census.
+    — operators/cleaning.py:null_count_exprs) in one ROLLUP pass:
+    per-type count + avg/min/max + null-count rows, plus the
+    grand-total row whose ``n_types`` IS the reference's
+    ``select(col).distinct()`` count and whose ``n_null_*`` columns ARE
+    its one-row global null census.
     One scan, one aggregate (the distinct-count's expand rides the same
     exchange); per-type rows report their trivially-1 distinct count so
     no column is ever NULL."""

@@ -213,10 +213,10 @@ def docs_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums → one hash agg per doc → argmax CASE. The script counts ride
     the same pass: Generate evaluates child columns once per input row
     and replicates them, so the two char-count columns are computed
-    per DOCUMENT, not per token. The per-row higher-order form
-    (functions.text.lang_id_scores) evaluates its lambdas interpreted,
-    once per language per token — ~4× slower at sf0.1; the explode+agg
-    form stays in whole-stage codegen end to end."""
+    per DOCUMENT, not per token. A per-row higher-order form (marker
+    filters inside F.transform) evaluates its lambdas interpreted, once
+    per language per token — ~4× slower at sf0.1; the explode+agg form
+    stays in whole-stage codegen end to end."""
     from big_data_chicago_crimes_spark.functions.text import tokens
     from big_data_chicago_crimes_spark.operators.dedup import spread_for_compute
 

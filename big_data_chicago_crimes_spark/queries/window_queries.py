@@ -3,8 +3,9 @@
 Includes the reference's moving average with CORRECTED semantics (its
 Window.partitionBy over the grouping keys degenerates to identity —
 Dataset.py:521-523, SURVEY.md §2.5), plus ranking/lag analytics and the
-event-time windows (tumbling / sliding / session) the streaming surface
-shares with batch.
+event-time windows (tumbling / sliding / session). The sliding, session
+and windowed-HLL queries call the streaming/windows.py builders, so
+each oracle certifies the transformation a streaming job runs.
 """
 
 from __future__ import annotations
@@ -20,6 +21,11 @@ from big_data_chicago_crimes_spark.operators.windows import (
 )
 from big_data_chicago_crimes_spark.plans.registry import register
 from big_data_chicago_crimes_spark.sources.readers import load_tables
+from big_data_chicago_crimes_spark.streaming.windows import (
+    session_window_agg,
+    sliding_window_agg,
+    windowed_distinct_hll,
+)
 
 
 def _monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,13 +38,9 @@ def _monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_monthly_window_surface",
-    # merges the former orders_moving_avg_3m and orders_monthly_delta
-    # registrations (both r6-green, same monthly-aggregate spine) into
-    # one query: BOTH window operators — the 3-row trailing-average
-    # frame and the lag-1 delta — still execute and hash-certify in a
-    # single registry slot; the slot freed funds the
-    # events_interval_join_batch query (the purchaser_error_overlap
-    # merge-funding pattern, VERDICT r7 #2)
+    # BOTH window operators — the 3-row trailing-average frame and the
+    # lag-1 delta — execute and hash-certify on one monthly-aggregate
+    # spine in a single registry slot
     oracle="""
         WITH m AS (
             SELECT CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS year,
@@ -144,12 +146,12 @@ def _hourly_tumbling_oracle() -> str:
 
 @register(
     "events_hourly_tumbling",
-    # r14 zero-cost extend: per-window exact distinct users next to the
-    # windowed-HLL estimate (streaming/windows.windowed_distinct_hll —
-    # the chained two-aggregation plan Spark runs as a STREAM in append
-    # mode; stream==batch per-window equality is pinned in
-    # tests/test_streaming.py, and this row hash-certifies the batch
-    # twin's full integer sketch state against the DuckDB replay).
+    # per-window exact distinct users next to the windowed-HLL estimate
+    # (streaming/windows.windowed_distinct_hll — the chained
+    # two-aggregation plan Spark runs as a STREAM in append mode; this
+    # row hash-certifies its full integer sketch state against the
+    # DuckDB replay). The exact countDistinct leg cannot run on a
+    # stream, so the HLL builder is this query's streaming form.
     oracle=_hourly_tumbling_oracle(),
     tags=("time-window", "streaming-shape", "sketch", "hll"),
 )
@@ -162,10 +164,6 @@ def events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 2^p register rows per window at ANY cardinality, the form that
     survives a 100 TB/day stream; built by the SAME
     ``windowed_distinct_hll`` plan the streaming job runs)."""
-    from big_data_chicago_crimes_spark.streaming.windows import (
-        windowed_distinct_hll,
-    )
-
     t = load_tables(spark, sf_dir)
     base = (
         t.events.groupBy(F.window("ts", "1 hour").alias("w"))
@@ -216,29 +214,17 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows. The oracle reproduces Spark's window assignment (windows
     aligned to the slide grid, window_start ∈ {trunc30(ts), trunc30(ts)-30m})."""
     t = load_tables(spark, sf_dir)
-    return (
-        t.events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "cnt",
-            "total_value",
-        )
-        .orderBy("window_start")
-    )
+    return sliding_window_agg(t.events).orderBy("window_start")
 
 
 @register(
     "events_interval_join_batch",
-    # funded by the orders_moving_avg_3m + orders_monthly_delta merge
-    # (orders_monthly_window_surface). Certifies the BATCH degradation of
-    # the watermarked stream-stream interval join (VERDICT r7 #2c): the
-    # builder is batch/stream symmetric by construction
-    # (streaming/joins.py:26 — watermarks only attach to streaming
-    # inputs), and tests/test_streaming.py proves stream-vs-batch row
-    # equality, so a full-oracle row here certifies the shared join
-    # logic the streaming path executes. Exact-membership output: every
-    # (purchase, preceding view) pair inside the 6-hour interval.
+    # Certifies the BATCH degradation of the watermarked stream-stream
+    # interval join: the builder is batch/stream symmetric by
+    # construction (watermarks only attach to streaming inputs), so a
+    # full-oracle row here certifies the shared join logic the streaming
+    # path executes. Exact-membership output: every (purchase,
+    # preceding view) pair inside the 6-hour interval.
     oracle="""
         SELECT p.user_id AS p_user, p.event_id AS purchase_id,
                STRFTIME(p.ts, '%Y-%m-%d %H:%M:%S') AS p_ts,
@@ -290,17 +276,16 @@ def events_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("time-window", "session", "streaming-shape"),
 )
 def user_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization with a 30-minute inactivity gap via the built-in
-    session_window (the same operator Structured Streaming uses
-    stateful-ly). The oracle is the gaps-and-islands formulation —
-    session_window merges events whose gap is STRICTLY less than 30m,
-    so a gap of exactly 30m starts a new session on both sides."""
+    """Sessionization with a 30-minute inactivity gap: sessions per
+    user over the session_window_agg builder (the same operator
+    Structured Streaming runs statefully). The oracle is the
+    gaps-and-islands formulation — session_window merges events whose
+    gap is STRICTLY less than 30m, so a gap of exactly 30m starts a new
+    session on both sides."""
     t = load_tables(spark, sf_dir)
-    sessions = t.events.groupBy(
-        F.session_window("ts", "30 minutes").alias("sw"), "user_id"
-    ).agg(F.count("*").alias("n_events"))
     return (
-        sessions.groupBy("user_id")
+        session_window_agg(t.events)
+        .groupBy("user_id")
         .agg(F.count("*").alias("n_sessions"))
         .orderBy("user_id")
     )

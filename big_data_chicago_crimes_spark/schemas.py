@@ -92,11 +92,11 @@ LINEITEM_SCHEMA = _st(
 
 # The physical encoding of events.ts has CHANGED across testdata
 # generations: TIMESTAMP(NANOS) (which Spark's reader rejects outright,
-# [PARQUET_TYPE_ILLEGAL] — read as raw INT64 ns instead) in rounds 1-3,
-# TIMESTAMP(MICROS)/ntz from round 4 on. Readers must NOT assume one:
-# ``sources.readers.events_read_schema`` peeks the parquet footer and
-# picks the matching read schema, and ``normalize_event_ts`` branches on
-# the LOADED dtype. tests/test_data_contract.py pins the end result.
+# [PARQUET_TYPE_ILLEGAL] — read as raw INT64 ns instead) in older ones,
+# TIMESTAMP(MICROS)/ntz in newer ones. Readers must NOT assume one:
+# ``sources.readers.adaptive_read_schema`` peeks the parquet footer and
+# picks the matching read schema, and ``normalize_temporals`` branches
+# on the LOADED dtype. tests/test_data_contract.py pins the end result.
 def events_schema_with_ts(ts_type: T.DataType) -> T.StructType:
     """EVENTS schema with ``ts`` declared as ``ts_type`` — the read-time
     schema for whichever physical encoding the footer reports."""

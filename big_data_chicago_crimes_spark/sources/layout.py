@@ -1,78 +1,16 @@
-"""Lake layout: the canonical partitioned/bucketed storage the engine
-writes for repeated querying (SURVEY.md §1.5 — the reference keeps one
-big unpartitioned parquet per cached result; at 100 TB layout IS the
-optimizer's biggest lever).
-
-Layout decisions, per table:
-
-- ``lineitem``  → partitioned by ``ship_year`` (the dominant filter
-  dimension: every pricing/trend query carries a date predicate →
-  partition pruning skips whole years).
-- ``orders``    → partitioned by ``order_year``.
-- ``documents`` → partitioned by ``lang`` (text pipelines fan out
-  per-language; lang is low-cardinality and evenly sized here).
-- ``embeddings``→ partitioned by LSH ``bucket`` (ANN probes become
-  partition-pruned scans — see operators/similarity.py).
-- ``events``    → partitioned by ``event_date`` (daily event-time
-  pruning; the streaming sink would roll the same way).
-
-Partition columns are ADDED (derived), never replacing the source
-column, so query semantics are unchanged.
+"""Lake layout: Z-order (Morton) clustering for multi-dimensional
+row-group skipping (SURVEY.md §1.5 — the reference keeps one big
+unpartitioned parquet per cached result; at 100 TB layout IS the
+optimizer's biggest lever). Hive partitioning needs no helper here: the
+lake queries write through ``sinks.write_parquet(partition_by=...)``.
+The Z-order key is a derived column dropped before the write, so query
+semantics are unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from big_data_chicago_crimes_spark.operators.similarity import hyperplane_lsh_buckets
-from big_data_chicago_crimes_spark.schemas import EMB_DIM
-from big_data_chicago_crimes_spark.sources.readers import load_tables
-
-
-def materialize_lake(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
-    """Write the partitioned lake from the flat testdata tables.
-    Returns table → path. Idempotent (overwrite)."""
-    t = load_tables(spark, sf_dir)
-    paths: dict[str, str] = {}
-
-    def write(df: DataFrame, name: str, partition_by: list[str]) -> None:
-        path = f"{out_dir}/{name}"
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        paths[name] = path
-
-    write(
-        t.lineitem.withColumn("ship_year", F.year("l_shipdate")),
-        "lineitem",
-        ["ship_year"],
-    )
-    write(
-        t.orders.withColumn("order_year", F.year("o_orderdate")),
-        "orders",
-        ["order_year"],
-    )
-    write(t.documents, "documents", ["lang"])
-    write(
-        hyperplane_lsh_buckets(t.embeddings, EMB_DIM, n_planes=8),
-        "embeddings",
-        ["bucket"],
-    )
-    write(
-        t.events.withColumn("event_date", F.to_date("ts")),
-        "events",
-        ["event_date"],
-    )
-    # dimension tables stay flat — they broadcast anyway
-    for name in ("region", "nation", "customer", "supplier", "part"):
-        df = t[name]
-        path = f"{out_dir}/{name}"
-        df.write.mode("overwrite").parquet(path)
-        paths[name] = path
-    return paths
-
-
-def read_lake(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/{name}")
 
 
 def zorder_key(

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from big_data_chicago_crimes_spark.schemas import (
-    TABLE_NAMES,
-    TESTDATA_SCHEMAS,
-    events_schema_with_ts,
-)
+from big_data_chicago_crimes_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 
 
 def read_parquet(
@@ -123,38 +119,29 @@ def _parquet_leaf_types(path: str) -> dict[str, tuple]:
     }
 
 
-def adaptive_read_schema(path: str, declared: T.StructType) -> T.StructType:
-    """Read schema for ``path``: ``declared`` with every TimestampType
-    column re-typed to match the file's ACTUAL physical encoding (one
-    memoized metadata read per (path, mtime) per process; no data scan).
-
-    The testdata generator has shipped temporal columns as
-    TIMESTAMP(NANOS) (a parquet type Spark's reader rejects,
-    [PARQUET_TYPE_ILLEGAL] — must be read as raw INT64), as
-    TIMESTAMP(MICROS)/ntz, and Spark itself historically wrote INT96.
-    Assuming any one encoding corrupts the others: ns read as µs puts
-    2024 events in 1970 (the round-4 regression). So: look, don't
-    assume — for every declared-timestamp column, not just events.ts.
-    ``normalize_temporals`` converts the loaded columns back to the
-    declared logical types."""
-    return _adaptive_schema_and_units(path, declared)[0]
-
-
-def temporal_units(path: str, declared: T.StructType) -> dict[str, str | None]:
-    """Per-column temporal unit for declared-timestamp columns that LOAD
-    as LongType, decided ONCE PER COLUMN from the parquet logical-type
-    annotation (ADVICE r13 — the footer is authoritative: a typed
-    timestamp[ns] column is nanoseconds for every row, full stop):
-    ``'ns'`` for typed TIMESTAMP(NANOS), ``None`` for untyped INT64
-    (the footer genuinely does not say — ``normalize_temporals`` falls
-    back to the per-row magnitude heuristic for those). Memoized with
-    the read schema (same key, one footer peek)."""
-    return _adaptive_schema_and_units(path, declared)[1]
-
-
-def _adaptive_schema_and_units(
+def adaptive_read_schema(
     path: str, declared: T.StructType
 ) -> tuple[T.StructType, dict[str, str | None]]:
+    """(read schema, temporal units) for ``path``.
+
+    The read schema is ``declared`` with every TimestampType column
+    re-typed to match the file's ACTUAL physical encoding (one memoized
+    metadata read per (path, mtime) per process; no data scan). The
+    testdata generator has shipped temporal columns as TIMESTAMP(NANOS)
+    (a parquet type Spark's reader rejects, [PARQUET_TYPE_ILLEGAL] —
+    must be read as raw INT64), as TIMESTAMP(MICROS)/ntz, and Spark
+    itself historically wrote INT96. Assuming any one encoding corrupts
+    the others: ns read as µs puts 2024 events in 1970. So: look, don't
+    assume — for every declared-timestamp column, not just events.ts.
+
+    The units map each declared-timestamp column that LOADS as LongType
+    to its unit, decided ONCE PER COLUMN from the parquet logical-type
+    annotation (the footer is authoritative: a typed timestamp[ns]
+    column is nanoseconds for every row): ``'ns'`` for typed
+    TIMESTAMP(NANOS), ``None`` for untyped INT64 (the footer genuinely
+    does not say — ``normalize_temporals`` falls back to the per-row
+    magnitude heuristic for those). ``normalize_temporals`` converts the
+    loaded columns back to the declared logical types."""
     import pyarrow as pa
 
     # the declared schema is part of the key: two callers reading the
@@ -206,18 +193,18 @@ def normalize_temporals(
     its LOADED dtype back to TimestampType:
 
     - LongType → epoch integer. The UNIT comes from ``units`` (the
-      footer's logical-type annotation via ``temporal_units`` — decided
-      ONCE PER COLUMN, the authoritative answer for typed
+      footer's logical-type annotation via ``adaptive_read_schema`` —
+      decided ONCE PER COLUMN, the authoritative answer for typed
       TIMESTAMP(NANOS) files; every production loader passes it). When
       the footer is silent (untyped INT64) or no ``units`` is supplied,
       fall back to the per-row magnitude heuristic: v ≥ 10^17 or
       ≤ −10^17 is nanoseconds (any date after 1973 in ns exceeds it; in
       µs that magnitude is the year 5138), else microseconds — so an
       untyped-INT64-micros generation cannot be shrunk 1000× into
-      January 1970 (the round-4 regression class this reader exists to
+      January 1970 (the regression class this reader exists to
       prevent). The heuristic's blind spot — ns epochs before ~March
       1973 decode as µs — is exactly why typed files take the footer
-      path (ADVICE r13). The two-sided comparison (not ``abs``) stays
+      path. The two-sided comparison (not ``abs``) stays
       total on the full long range: abs(Long.MIN_VALUE) raises
       ARITHMETIC_OVERFLOW under ANSI. Conversion uses exact integer
       division (``DIV`` stays in bigint — double division loses
@@ -260,31 +247,13 @@ def normalize_temporals(
     return out
 
 
-def events_read_schema(path: str) -> T.StructType:
-    """Footer-adaptive read schema for an events parquet (the streaming
-    source needs its schema up front). Thin wrapper over
-    ``adaptive_read_schema`` with the canonical events schema."""
-    return adaptive_read_schema(path, events_schema_with_ts(T.TimestampType()))
-
-
-def normalize_event_ts(
-    df: DataFrame, units: dict[str, str | None] | None = None
-) -> DataFrame:
-    """Normalize a loaded events frame's ``ts`` to TimestampType —
-    ``normalize_temporals`` specialized to the events schema (kept as a
-    named entry point for the streaming reader and encoding tests).
-    Pass ``units=temporal_units(path, ...)`` when the source path is
-    known so typed ns columns take the exact footer decision."""
-    return normalize_temporals(df, events_schema_with_ts(T.TimestampType()), units)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = f"{sf_dir}/{name}.parquet"
     declared = TESTDATA_SCHEMAS[name]
     # temporal encodings vary by testdata generation — adapt, don't assume
-    schema, units = _adaptive_schema_and_units(path, declared)
+    schema, units = adaptive_read_schema(path, declared)
     raw = read_parquet(spark, path, schema)
     return normalize_temporals(raw, declared, units)
 

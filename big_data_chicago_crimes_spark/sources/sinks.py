@@ -74,89 +74,6 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
-def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) for a parquet directory, via the
-    Hadoop FS API (works for local, HDFS, and object stores)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    n, total = 0, 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if name.endswith(".parquet"):
-            n += 1
-            total += f.getLen()
-    return n, total
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a fragmented parquet directory into
-    ceil(total_bytes / target) files. Streaming sinks and fine-grained
-    partition writes accumulate KB-scale files; at 100 TB that means
-    millions of scan tasks and metadata-bound planning, so compaction is
-    a standing maintenance job. Rewrites via a sibling ``_compacting``
-    directory + rename swap (never reads and overwrites the same path —
-    Spark's lazy scan would see its own truncation). The swap goes
-    old→``_backup``, tmp→path, delete backup: a crash between any two
-    steps leaves the full data reachable under a durable name (the
-    earlier delete-then-rename ordering stranded the data at
-    ``_compacting`` with the canonical path gone).
-    Returns (files_before, files_after)."""
-    import math
-
-    n_before, total = _dir_stats(spark, path)
-    n_target = max(1, math.ceil(total / target_file_bytes))
-    if n_before <= n_target:
-        return n_before, n_before
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    p_old = jvm.org.apache.hadoop.fs.Path(path)
-    # REFUSE hive-partitioned inputs: read+flat-rewrite would hydrate
-    # the partition columns into data columns and destroy the layout
-    # (every partition-pruned probe then scans the whole table, with no
-    # error anywhere). Per-partition compaction is the correct job shape
-    # for partitioned tables — run this on each leaf directory.
-    for st in fs.listStatus(p_old):
-        if st.isDirectory() and "=" in st.getPath().getName():
-            raise ValueError(
-                f"compact_parquet: {path} is hive-partitioned "
-                f"({st.getPath().getName()}) — compact each leaf "
-                "partition directory instead; a flat rewrite would "
-                "silently destroy the partition layout"
-            )
-    tmp = path.rstrip("/") + "_compacting"
-    spark.read.parquet(path).repartition(n_target).write.mode("overwrite").parquet(tmp)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_backup")
-    if fs.exists(p_backup):  # leftover from an interrupted earlier swap
-        fs.delete(p_backup, True)
-
-    def _rename(src, dst, step: str) -> None:
-        # Hadoop rename signals failure with a FALSE return, not an
-        # exception — an unchecked swap step followed by the backup
-        # delete would destroy the only durable copy
-        if not fs.rename(src, dst):
-            raise RuntimeError(
-                f"compact_parquet: rename {step} failed ({src} -> {dst}); "
-                "data is intact — canonical/backup/_compacting hold the "
-                "full copy, resolve manually before re-running"
-            )
-
-    _rename(p_old, p_backup, "old->backup")
-    _rename(p_tmp, p_old, "tmp->canonical")
-    fs.delete(p_backup, True)
-    n_after, _ = _dir_stats(spark, path)
-    return n_before, n_after
-
-
 def lake_root(spark: SparkSession, sf_dir: str) -> str:
     """Per-SF lake-cache root for ``cached()`` materializations (ANN
     indexes, CSV cycles, Z-ordered tables). Keyed by the sf dir's

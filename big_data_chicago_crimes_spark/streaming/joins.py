@@ -1,20 +1,18 @@
-"""Stream-stream joins, batch/stream symmetric.
+"""Stream joins, batch/stream symmetric.
 
-The other streaming shapes (windowed aggs, session windows, dedup,
-custom state) are covered in windows.py / stateful.py; this module adds
-the remaining first-class Structured Streaming operator: the
-watermarked stream-stream INTERVAL join ("purchases joined to the views
-that preceded them within N minutes"), the streaming counterpart of the
-batch as-of/interval analysis in operators/asof.py.
+- ``purchases_after_views_interval_join``: the watermarked
+  stream-stream INTERVAL join ("purchases joined to the views that
+  preceded them within N minutes"), run by events_interval_join_batch.
+  Both inputs carry event-time watermarks and the join condition
+  carries a time-range bound, so Spark buffers only the range-bounded
+  slice of each side in the state store and evicts state once the
+  watermark passes — without the range bound a stream-stream join's
+  state grows forever.
+- ``dedup_stream_against_corpus``: the stream-static anti-join dedup at
+  the ingest edge, run by docs_stream_static_dedup_batch.
 
-Semantics and scale shape: both inputs carry event-time watermarks and
-the join condition carries a time-range bound, so Spark can (a) buffer
-only the range-bounded slice of each side in the state store and (b)
-evict state once the watermark passes — without the range bound a
-stream-stream join's state grows forever. The builder is batch/stream
-symmetric: over batch frames it degrades to a plain range join, which is
-what the equality test exploits (same builder, both modes, identical
-rows — tests/test_streaming.py).
+Over batch frames each builder degrades to the plain batch plan, so the
+registered query's oracle certifies the logic the stream runs.
 """
 
 from __future__ import annotations
@@ -137,9 +135,8 @@ def dedup_stream_against_corpus(
     WITH ``ts_col`` the in-stream dedup is scoped to the watermark
     horizon (that bounded state is the point): a re-arrival later than
     the watermark is re-emitted, so long-horizon exactness must come
-    from the downstream index (the ``ingest_with_incremental_dedup``
-    loop, whose fingerprint anti-join has no horizon), not from this
-    operator's state.
+    from the downstream fingerprint index, not from this operator's
+    state.
     """
     from big_data_chicago_crimes_spark.operators.dedup import doc_fingerprint
 
@@ -152,150 +149,3 @@ def dedup_stream_against_corpus(
             ["fingerprint"]
         )
     return fresh.dropDuplicates(["fingerprint"])
-
-
-def ingest_with_incremental_dedup(
-    docs_stream: DataFrame,
-    accepted_path: str,
-    index_path: str,
-    checkpoint_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """The full incremental-ingest loop as a ``foreachBatch`` stream: each
-    micro-batch is deduped against the CURRENT fingerprint index
-    (operators/dedup.py:incremental_exact_dedup — in-batch min-id dedup
-    plus a fingerprint anti-join), accepted rows are appended to
-    ``accepted_path``, and their fingerprints are appended to
-    ``index_path`` — so a document accepted in micro-batch N is rejected
-    as a duplicate in micro-batch N+1, across RESTARTS, without any
-    state store.
-
-    Why foreachBatch instead of the stream-static join
-    (``dedup_stream_against_corpus``): a stream-static join resolves the
-    static side's file listing at plan time, so appends made DURING the
-    run are not guaranteed visible to later micro-batches; inside
-    foreachBatch every batch is plain batch Spark — the index read is
-    fresh by construction.
-
-    Replay idempotence (ADVICE r8): both outputs carry ``batch_id``,
-    and a replayed micro-batch first checks which of its two appends
-    already landed — fully-processed batches are skipped outright, and
-    a crash BETWEEN the appends resumes by deriving the missing
-    fingerprint rows from the already-written accepted rows (never by
-    re-running the dedup, whose answer could differ against the
-    now-partial index). The accepted table therefore converges to
-    exactly one row per accepted document under any crash/replay
-    interleaving — no downstream dedup needed.
-
-    Returns the started StreamingQuery; caller awaits/stops it.
-    """
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_process_batch(
-            batch_df, batch_id, accepted_path, index_path, text_col, id_col
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .start()
-    )
-
-
-def ingest_process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    accepted_path: str,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """One micro-batch of the ingest loop, idempotent under replay —
-    module-level so the replay contract is unit-testable without
-    forcing a checkpoint recovery (tests/test_streaming.py calls it
-    twice with the same batch_id and asserts no duplicate rows)."""
-    from big_data_chicago_crimes_spark.operators.dedup import (
-        doc_fingerprint,
-        incremental_exact_dedup,
-    )
-    from pyspark.errors import AnalysisException
-
-    from big_data_chicago_crimes_spark.sources.sinks import path_exists
-
-    spark = batch_df.sparkSession
-
-    def _has_batch(path: str) -> bool:
-        if not path_exists(spark, path):
-            return False
-        # mergeSchema: a table whose OLD files predate the batch_id
-        # column must not hide it — default schema inference samples one
-        # file, so on an upgraded deployment an old file could make this
-        # return False for an already-written batch and let the replay
-        # path double-append accepted rows (ADVICE r9). Merging unions
-        # the schemas; pre-batch_id rows read as NULL and never match.
-        try:
-            df = spark.read.option("mergeSchema", "true").parquet(path)
-        except AnalysisException:
-            # the directory exists but holds no committed parquet files
-            # (a crash during the very first write's job commit leaves
-            # only _temporary/): no committed files means no batch —
-            # treating the unreadable dir as "done" or crashing here
-            # would wedge every replay of that micro-batch
-            return False
-        if "batch_id" not in df.columns:
-            return False
-        return bool(df.filter(F.col("batch_id") == batch_id).head(1))
-
-    def _index_rows(frame: DataFrame) -> DataFrame:
-        # the ONE index row shape, shared by the normal path and the
-        # crash-recovery branch so the two can never silently diverge
-        return frame.select(
-            doc_fingerprint(text_col).alias("fingerprint"),
-            F.lit(batch_id).alias("batch_id"),
-        )
-
-    # NOTE the replay probe costs two mergeSchema footer scans per
-    # micro-batch, growing with table size (O(N²) footer reads over a
-    # run). A production deployment amortizes it with a committed-batch
-    # marker (e.g. partition the appends by batch_id and probe directory
-    # existence, falling back to this row probe only when the marker is
-    # ambiguous); the row probe stays the correctness ground truth.
-    acc_done = _has_batch(accepted_path)
-    idx_done = _has_batch(index_path)
-    if acc_done and idx_done:
-        return  # fully-processed replay
-    if acc_done:
-        # crashed between the two appends: finish the index append FROM
-        # the rows the first attempt accepted (re-running the dedup
-        # against the partial index would re-accept nothing — the
-        # fingerprints must come from what was actually written)
-        # mergeSchema here too: this read filters on batch_id, so the
-        # same legacy-footer sampling hazard _has_batch guards against
-        # applies (an old file without the column would raise
-        # UNRESOLVED_COLUMN on every replay and wedge the stream)
-        _index_rows(
-            spark.read.option("mergeSchema", "true")
-            .parquet(accepted_path)
-            .filter(F.col("batch_id") == batch_id)
-        ).write.mode("append").parquet(index_path)
-        return
-
-    if path_exists(spark, index_path):
-        index = spark.read.parquet(index_path)
-    else:
-        index = spark.createDataFrame([], "fingerprint string")
-    accepted = incremental_exact_dedup(batch_df, index, text_col, id_col)
-    # persist: the two writes below would otherwise each re-run the
-    # whole dedup (scan + groupBy + anti/semi joins) — and a
-    # nondeterministic plan could let the two writes disagree
-    accepted = accepted.withColumn("batch_id", F.lit(batch_id)).persist()
-    try:
-        # fingerprints first would lose rows on a crash between writes;
-        # rows first lets the replay branch above finish the index
-        # append from the accepted rows — crash-ordering chosen
-        # deliberately
-        accepted.write.mode("append").parquet(accepted_path)
-        _index_rows(accepted).write.mode("append").parquet(index_path)
-    finally:
-        accepted.unpersist()

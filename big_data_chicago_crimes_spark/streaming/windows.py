@@ -1,70 +1,17 @@
 """Event-time windowed aggregations, batch/stream symmetric.
 
 The same ``F.window`` / ``F.session_window`` groupings run identically
-over a batch DataFrame and a ``readStream`` DataFrame — the engine
-exposes one builder for both, so every windowed query in the registry
-(window_queries.py) doubles as the streaming job's transformation, with
-``withWatermark`` bounding state for late data.
-
-Local smoke path: parquet file source → memory sink →
-``processAllAvailable()`` drives the stream to completion synchronously
-(no timers, deterministic results).
+over a batch DataFrame and a ``readStream`` DataFrame. Each builder here
+is the transformation its registered window query runs
+(window_queries.py), so the query's DuckDB oracle certifies the operator
+a streaming job runs; on a stream, ``withWatermark`` bounds state for
+late data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from big_data_chicago_crimes_spark.sources.readers import (
-    events_read_schema,
-    normalize_event_ts,
-)
-
-
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet. In production this is
-    kafka/kinesis; the transformation stack is identical. The physical
-    encoding of ``ts`` varies by testdata generation (INT64 ns vs
-    timestamp[us]) — a streaming source needs its schema up front, so
-    peek the footer for the right one, then normalize exactly as the
-    batch loader does (stream/batch symmetry includes ingestion)."""
-    # the file stream source requires a DIRECTORY; glob-filter to the
-    # events file inside the scale-factor dir
-    from big_data_chicago_crimes_spark.schemas import events_schema_with_ts
-    from big_data_chicago_crimes_spark.sources.readers import temporal_units
-    from pyspark.sql import types as T
-
-    path = f"{sf_dir}/events.parquet"
-    raw = (
-        spark.readStream.schema(events_read_schema(path))
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    # typed ns files take the exact footer unit; only untyped INT64
-    # falls back to the per-row magnitude heuristic (ADVICE r13)
-    units = temporal_units(path, events_schema_with_ts(T.TimestampType()))
-    return normalize_event_ts(raw, units)
-
-
-def tumbling_window_agg(
-    events: DataFrame, width: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """count + sum(value) per event_type per tumbling window. On a
-    stream the watermark bounds state: windows older than max(event
-    time) - watermark are finalized and evicted."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "cnt",
-            "total_value",
-        )
-    )
 
 
 def sliding_window_agg(
@@ -73,13 +20,16 @@ def sliding_window_agg(
     slide: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
+    """count + sum(value) per sliding window; each event lands in
+    width/slide windows."""
     src = events.withWatermark("ts", watermark) if events.isStreaming else events
     return (
         src.groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(F.count("*").alias("cnt"))
+        .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "cnt",
+            "total_value",
         )
     )
 
@@ -120,10 +70,8 @@ def windowed_distinct_hll(
     per-window estimate) — the multiple-stateful-operator shape Spark
     supports in append mode since 3.4: both groupings carry the SAME
     event-time window column, so the watermark propagates and each
-    window's registers finalize exactly once. Batch/stream symmetric:
-    the identical plan runs over a batch frame (certified by the
-    ``hll_users`` columns of events_hourly_tumbling's driver row and by
-    the stream==batch equality test in tests/test_streaming.py).
+    window's registers finalize exactly once. The batch form is
+    certified by the ``hll_*`` columns of events_hourly_tumbling.
 
     Output: (w, n_regs, z_int, hll_est) — one row per finalized window;
     the caller formats ``w``. Items are cast to string so the md5
@@ -145,52 +93,3 @@ def windowed_distinct_hll(
     )
     sk = cells.groupBy("w", "idx").agg(F.max("rho").alias("m_rho"))
     return hll_estimate(sk, ["w"])
-
-
-def streaming_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: keep the first arrival per key, dropping
-    re-deliveries that arrive within the watermark horizon — the
-    streaming counterpart of ``operators.dedup.exact_dedup`` for the
-    ingest edge of a training-data pipeline (at-least-once sources
-    re-deliver; this makes the downstream exactly-once w.r.t. keys).
-
-    Built on ``dropDuplicatesWithinWatermark``: state for a key is
-    evicted once the watermark passes its first-seen event time, so
-    state is bounded by (key arrival rate × watermark) instead of
-    growing forever like a plain streaming ``dropDuplicates``. In batch
-    mode the same call degrades to deterministic keyed dedup."""
-    keys = keys if keys is not None else ["event_id"]
-    if not keys:
-        # an explicitly-empty key list (e.g. a dynamically-built config)
-        # previously fell into the event_id default silently, dropping
-        # distinct rows that happen to share an event_id
-        raise ValueError("streaming_dedup: keys must be non-empty")
-    if events.isStreaming:
-        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-    return events.dropDuplicates(keys)
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "append"
-) -> DataFrame:
-    """Drive a streaming DataFrame to completion against the memory sink
-    and return the result as a batch DataFrame. Deterministic: blocks on
-    processAllAvailable, then stops the query. Default mode 'append' is
-    valid for every operator this package exposes (joins, dedup,
-    projections, watermarked aggregations); the old 'complete' default
-    raised at start() for any non-aggregate caller relying on it."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.table(query_name)

@@ -1,6 +1,7 @@
 """Shared fixtures: one SparkSession per test run, DuckDB oracle runner,
-and the spark-vs-oracle comparator that mirrors the driver's gate
-(row count + column names + order-insensitive values)."""
+the spark-vs-oracle comparator that mirrors the driver's gate (row count
++ column names + order-insensitive values), and the local stream harness
+(file source -> memory sink) the stream==batch tests drive."""
 
 from __future__ import annotations
 
@@ -12,8 +13,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from big_data_chicago_crimes_spark.schemas import TABLE_NAMES
+from big_data_chicago_crimes_spark.schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from big_data_chicago_crimes_spark.session import get_spark
+from big_data_chicago_crimes_spark.sources.readers import (
+    adaptive_read_schema,
+    normalize_temporals,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -38,6 +43,43 @@ def duck():
         )
     yield con
     con.close()
+
+
+def read_events_stream(spark, sf_dir: str):
+    """File-source stream over ``sf_dir/events.parquet`` — the local
+    stand-in for the Kafka/Kinesis source a deployment reads; the
+    transformation stack on top is identical. A streaming source needs
+    its schema up front, so peek the footer and normalize exactly as
+    ``load_table`` does (stream/batch symmetry includes ingestion)."""
+    path = f"{sf_dir}/events.parquet"
+    declared = TESTDATA_SCHEMAS["events"]
+    schema, units = adaptive_read_schema(path, declared)
+    # the file stream source requires a DIRECTORY; glob-filter to the
+    # events file inside the scale-factor dir
+    raw = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_temporals(raw, declared, units)
+
+
+def run_stream_to_memory(stream_df, query_name: str, output_mode: str = "append"):
+    """Drive a streaming DataFrame to completion against the memory sink
+    and return the result as a batch DataFrame: blocks on
+    processAllAvailable, then stops the query."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return stream_df.sparkSession.table(query_name)
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -12,7 +12,7 @@ from big_data_chicago_crimes_spark.operators.cleaning import (
     booleans_to_int,
     clean_crimes,
     dedup_rows,
-    null_census,
+    null_count_exprs,
 )
 
 
@@ -88,7 +88,7 @@ def test_null_census_counts(spark):
     df = spark.createDataFrame(
         [(1, None), (2, "x"), (None, None)], "a int, b string"
     )
-    row = null_census(df).collect()[0]
+    row = df.select(null_count_exprs(df.columns)).collect()[0]
     assert row.a == 1 and row.b == 2
 
 

@@ -5,9 +5,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from big_data_chicago_crimes_spark.sources.sinks import cached, path_exists, write_parquet
 
 
@@ -36,26 +33,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     # partition pruning visible in the physical plan
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan or "bucket" in plan
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    """64 KB-scale fragments compact to a handful of files with
-    identical content; an already-compact directory is left alone."""
-    from big_data_chicago_crimes_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(50_000).selectExpr("id", "id * 2 AS v")
-    df.repartition(64).write.parquet(path)
-
-    before, after = compact_parquet(spark, path, target_file_bytes=1 * 1024 * 1024)
-    assert before == 64
-    assert after < 16
-    back = spark.read.parquet(path)
-    assert back.count() == 50_000
-    assert back.agg({"v": "sum"}).collect()[0][0] == 2 * (49_999 * 50_000 // 2)
-    # idempotent: second pass is a no-op
-    b2, a2 = compact_parquet(spark, path, target_file_bytes=1 * 1024 * 1024)
-    assert b2 == a2 == after
 
 
 def test_lake_root_invalidates_on_source_regeneration(spark, tmp_path):
@@ -154,17 +131,6 @@ def test_cached_rebuilds_over_partial_write(spark, tmp_path):
     assert out2.count() == 3
 
 
-def test_compact_refuses_partitioned_directory(spark, tmp_path):
-    from big_data_chicago_crimes_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "parted")
-    spark.range(100).withColumn("p", F.col("id") % 4).repartition(20).write.partitionBy(
-        "p"
-    ).parquet(path)
-    with pytest.raises(ValueError, match="hive-partitioned"):
-        compact_parquet(spark, path)  # default 128MB target -> 1 file, forces the rewrite path
-
-
 def test_tables_hasattr_protocol(spark, sf_dir):
     from big_data_chicago_crimes_spark.sources.readers import load_tables
 
@@ -200,7 +166,7 @@ def test_typed_ns_pre_1973_epoch_uses_footer_unit(spark, tmp_path):
     from pyspark.sql import types as T
 
     from big_data_chicago_crimes_spark.sources.readers import (
-        _adaptive_schema_and_units,
+        adaptive_read_schema,
         normalize_temporals,
         read_parquet,
     )
@@ -209,7 +175,7 @@ def test_typed_ns_pre_1973_epoch_uses_footer_unit(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     pq.write_table(pa.table({"ts": pa.array([ns_1970], pa.timestamp("ns"))}), path)
     declared = T.StructType([T.StructField("ts", T.TimestampType())])
-    schema, units = _adaptive_schema_and_units(path, declared)
+    schema, units = adaptive_read_schema(path, declared)
     assert units == {"ts": "ns"}
     out = normalize_temporals(read_parquet(spark, path, schema), declared, units)
     assert [str(r["ts"].date()) for r in out.collect()] == ["1970-01-02"]

@@ -6,46 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_chicago_crimes_spark.sources.layout import materialize_lake, read_lake
-
-
-@pytest.fixture(scope="module")
-def lake(spark, sf_dir, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("lake"))
-    paths = materialize_lake(spark, sf_dir, out)
-    return out, paths
-
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_lineitem_year_prunes_partitions(spark, lake):
-    out, _ = lake
-    li = read_lake(spark, out, "lineitem")
-    pruned = li.filter(F.col("ship_year") == 1996)
-    plan = _executed_plan(pruned)
-    assert "PartitionFilters" in plan and "ship_year" in plan
-    # and the result matches the non-partitioned predicate
-    assert pruned.count() == li.filter(F.year("l_shipdate") == 1996).count()
-
-
-def test_embeddings_bucket_prunes(spark, lake):
-    out, _ = lake
-    emb = read_lake(spark, out, "embeddings")
-    one_bucket = emb.filter(F.col("bucket") == 3)
-    plan = _executed_plan(one_bucket)
-    assert "PartitionFilters" in plan
-    assert one_bucket.count() < emb.count()
-
-
-def test_lake_preserves_row_counts(spark, sf_dir, lake):
-    out, paths = lake
-    from big_data_chicago_crimes_spark.sources.readers import load_tables
-
-    t = load_tables(spark, sf_dir)
-    for name in paths:
-        assert read_lake(spark, out, name).count() == t[name].count(), name
 
 
 def test_ivf_probe_is_partition_pruned_end_to_end(spark, sf_dir, tmp_path):

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.ml import Pipeline
+
 from big_data_chicago_crimes_spark.operators.ml import (
-    feature_pipeline,
+    _feature_stages,
     kmeans_cluster_sizes,
     string_columns,
 )
@@ -15,9 +17,15 @@ from big_data_chicago_crimes_spark.plans.registry import all_queries
 from big_data_chicago_crimes_spark.sources.readers import load_table
 
 
+def _fit_transform(df, label_col, **kw):
+    """The model runners' featurization, fit AND transformed on ``df``."""
+    stages, feature_cols = _feature_stages(df, label_col, **kw)
+    return Pipeline(stages=stages).fit(df).transform(df), feature_cols
+
+
 def test_feature_pipeline_fits_then_transforms(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").limit(200)
-    prepared, feature_cols = feature_pipeline(orders, "o_totalprice")
+    prepared, feature_cols = _fit_transform(orders, "o_totalprice")
     assert "features" in prepared.columns
     # dtype-driven selection picked up the string columns (bug 3 fixed)
     assert "o_orderpriority_idx" in feature_cols
@@ -133,10 +141,8 @@ def test_cross_validated_lr(spark, sf_dir):
 
 
 def test_one_hot_pipeline(spark, sf_dir):
-    from big_data_chicago_crimes_spark.operators.ml import one_hot_pipeline
-
     orders = load_table(spark, sf_dir, "orders").limit(300)
-    prepared, cols = one_hot_pipeline(orders, "o_totalprice")
+    prepared, cols = _fit_transform(orders, "o_totalprice", encode="onehot")
     assert "features" in prepared.columns
     assert any(c.endswith("_oh") for c in cols)
 

@@ -1,6 +1,5 @@
-"""Multimodal plumbing: decode/resize/feature-extract/frame-sample run
-Arrow-batched with stable schemas; the byte-histogram features feed the
-engine's own similarity operators end-to-end."""
+"""Multimodal plumbing: decode/resize/frame-sample run Arrow-batched
+with stable schemas."""
 
 from __future__ import annotations
 
@@ -9,11 +8,9 @@ from pyspark.sql import functions as F
 from big_data_chicago_crimes_spark.operators.multimodal import (
     attach_binary_payload,
     decode_media,
-    extract_features,
     resize_media,
     sample_frames,
 )
-from big_data_chicago_crimes_spark.operators.similarity import cosine_topk
 from big_data_chicago_crimes_spark.sources.readers import load_table
 
 
@@ -32,19 +29,6 @@ def test_resize_bounds(spark, sf_dir):
     rows = resize_media(_media(spark, sf_dir), 8, 8).collect()
     assert all(r.n_bytes_out <= 8 * 8 * 3 for r in rows)
     assert all((r.target_w, r.target_h) == (8, 8) for r in rows)
-
-
-def test_features_normalized_and_usable_for_similarity(spark, sf_dir):
-    feats = extract_features(_media(spark, sf_dir))
-    rows = feats.collect()
-    assert all(abs(sum(r.feature) - 1.0) < 1e-3 for r in rows)
-    # feed the engine's own ANN baseline with the extracted features
-    probe = rows[0].feature
-    top = cosine_topk(
-        feats, [float(x) for x in probe], k=3, vec_col="feature", id_col="doc_id"
-    ).collect()
-    assert top[0].doc_id == rows[0].doc_id  # self is most similar
-    assert top[0].cosine >= top[-1].cosine
 
 
 def test_frame_sampling_counts(spark, sf_dir):

@@ -348,47 +348,6 @@ def test_batch_ann_topk_planted_exact_copies(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1)) and len(ranks) <= 3
 
 
-def test_incremental_embedding_near_dups_planted(spark):
-    """Vector-side incremental dedup: a new batch containing exact
-    copies of corpus vectors must surface each (batch, corpus) pair at
-    cosine 1.0 (parallel duplicates share every signature bit — recall
-    1.0 by construction); noise vectors must produce no pair, and the
-    anti-join of flagged ids yields exactly the genuinely-new rows."""
-    import numpy as np
-
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        incremental_embedding_near_dups,
-    )
-
-    rng = np.random.RandomState(5)
-    dim = 64
-    corpus_vecs = rng.randn(30, dim)
-    new_noise = rng.randn(6, dim)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in corpus_vecs[i]]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, [float(x) for x in corpus_vecs[i]]) for i in range(4)]
-        + [(200 + j, [float(x) for x in new_noise[j]]) for j in range(6)],
-        "vec_id long, embedding array<float>",
-    )
-    pairs = incremental_embedding_near_dups(corpus, batch, threshold=0.95, dim=dim)
-    got = {(r.batch_id, r.corpus_id): r.cosine for r in pairs.collect()}
-    assert {(100 + i, i) for i in range(4)} <= set(got)
-    assert all(c == 1.0 for (b, c_), c in got.items() if b - 100 == c_)
-    assert not any(b >= 200 for b, _ in got), got  # noise stays clean
-
-    from pyspark.sql import functions as F
-
-    fresh = batch.join(
-        pairs.select(F.col("batch_id").alias("vec_id")).distinct(),
-        "vec_id",
-        "left_anti",
-    )
-    assert {r.vec_id for r in fresh.collect()} == {200 + j for j in range(6)}
-
-
 def test_assign_to_centroids_matches_numpy_argmin(spark):
     """Literal-codebook assignment (assign_to_centroids) must agree with
     a NumPy argmin over the same rounded squared-L2 distances — the
@@ -845,42 +804,6 @@ def test_pq_adc_equals_hand_computed_table_lookup(spark):
         assert out[vid] == round(expect, 6)
 
 
-def test_pq_train_beats_random_codebook_on_quantization_error(spark, sf_dir):
-    """The trained codebook's mean reconstruction error must beat the
-    seeded random one on the vectors it was trained on (the reason
-    pq_train exists)."""
-    import numpy as np
-
-    from big_data_chicago_crimes_spark.operators.similarity import (
-        pq_codebook,
-        pq_encode,
-        pq_train,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
-    rand_book = pq_codebook(m=4, k=8, dim=64)
-    trained = pq_train(emb, m=4, k=8)
-
-    def mean_err(book):
-        rows = pq_encode(emb, book).select("embedding", "pq_codes").collect()
-        errs = []
-        for r in rows:
-            v = np.array(r["embedding"], dtype=float)
-            rec = np.concatenate([np.array(book[s][r["pq_codes"][s]]) for s in range(4)])
-            errs.append(float(((v - rec) ** 2).sum()))
-        return sum(errs) / len(errs)
-
-    assert mean_err(trained) < mean_err(rand_book)
-
-
-def test_pq_train_empty_frame_raises(spark):
-    from big_data_chicago_crimes_spark.operators.similarity import pq_train
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="empty"):
-        pq_train(empty, m=2, k=2)
-
-
 def test_pq_adc_batch_matches_single_query_path(spark, sf_dir):
     """Per query, the one-scan batch form must equal the single-query
     operator exactly (same literal tables, same rounded-distance +
@@ -1001,7 +924,7 @@ def test_ivf_pq_topk_planted_duplicates_rank_first(spark):
     from the codebook (vector i = concat of sub-centroid (i+s) mod k per
     subspace, so every vector has a distinct, exactly-quantizable code
     tuple — a random codebook quantizes the organic embeddings
-    degenerately, which is what pq_train exists to fix): the query and
+    degenerately): the query and
     its exact copies share a coarse cell (first probed) and codes
     (ADC-minimal), so they must be exactly the top-3; and every result
     row must come from a probed cell (the pruned-scan contract)."""

@@ -1,38 +1,82 @@
 """Structured Streaming must produce the SAME result as the batch plan
 over the same parquet input — stream/batch symmetry is the engine's
-streaming correctness contract."""
+streaming correctness contract. Every builder a registered query calls
+runs here both ways; the query's DuckDB oracle certifies the batch side."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from big_data_chicago_crimes_spark.sources.readers import load_table
 from big_data_chicago_crimes_spark.streaming import (
-    read_events_stream,
-    run_stream_to_memory,
-    tumbling_window_agg,
+    purchases_after_views_interval_join,
+    session_window_agg,
+    sliding_window_agg,
+    windowed_distinct_hll,
 )
+from tests.conftest import read_events_stream, run_stream_to_memory
 
 
-def test_stream_matches_batch_tumbling(spark, sf_dir):
-    """Stream and batch must agree over the REAL testdata events file —
-    and the agreement must be non-vacuous: in round 4 a broken ts
-    conversion corrupted BOTH sides identically (30 days of events →
-    2 windows of 1970), so equality alone proved nothing. Pin the
-    window volume and epoch too."""
+def _interval_join(events):
+    return purchases_after_views_interval_join(
+        events.filter(F.col("event_type") == "purchase"),
+        events.filter(F.col("event_type") == "view"),
+        window="6 hours",
+    )
+
+
+def _hll(events):
+    return windowed_distinct_hll(events).select(
+        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "n_regs",
+        "z_int",
+        "hll_est",
+    )
+
+
+# builder -> (transformation as its query calls it, the output column
+# holding each row's event time, the fewest distinct times a correct
+# read yields at sf0.001, how many batch rows the stream may hold back).
+# ~30 days of events: hourly windows number in the hundreds, while the
+# 6-hour purchase->view join matches a few dozen pairs. Append mode
+# emits an aggregate row only once the 2-hour watermark passes its
+# window/session, so the trailing horizon may be missing: at most 6
+# half-hour-aligned 1-hour windows, 4 hourly ones, and the sessions of
+# the users active in the last 2.5 hours. The interval join emits every
+# match as soon as both sides arrive.
+STREAM_BUILDERS = {
+    "sliding_window_agg": (sliding_window_agg, "window_start", 100, 6),
+    "session_window_agg": (session_window_agg, "session_start", 100, 8),
+    "windowed_distinct_hll": (_hll, "window_start", 100, 4),
+    "purchases_after_views_interval_join": (_interval_join, "p_ts", 20, 0),
+}
+
+
+@pytest.mark.parametrize("builder", sorted(STREAM_BUILDERS))
+def test_stream_matches_batch(spark, sf_dir, builder):
+    """Each builder runs as a STREAM (append mode) over the real
+    testdata events file and every row it emits equals a batch row
+    exactly; only the trailing watermark horizon may be held back.
+    Equality alone is vacuous if ingestion is broken on both sides (a
+    broken ts conversion once turned 30 days of events into 2 windows
+    of 1970), so pin the row volume and the epoch too."""
+    build, time_col, min_times, horizon = STREAM_BUILDERS[builder]
     stream = read_events_stream(spark, sf_dir)
     assert stream.isStreaming
-    streamed = run_stream_to_memory(
-        tumbling_window_agg(stream), "stream_tumbling_test", output_mode="complete"
-    )
-    batch = tumbling_window_agg(load_table(spark, sf_dir, "events"))
-    s_rows = {tuple(r) for r in streamed.collect()}
-    b_rows = {tuple(r) for r in batch.collect()}
-    assert s_rows == b_rows
-    # ~30 days of synthetic events × hourly windows × event types: the
-    # corrupted read yielded 2 distinct window_starts; a correct one
-    # yields hundreds, all in a modern epoch.
-    starts = {r[0] for r in s_rows}
-    assert len(starts) > 100, f"suspiciously few windows: {len(starts)}"
-    assert all(s >= "2000-01-01" for s in starts), sorted(starts)[:3]
+    streamed = run_stream_to_memory(build(stream), f"stream_{builder}", "append")
+    batch = build(load_table(spark, sf_dir, "events"))
+
+    s_rows = sorted(map(str, streamed.collect()))
+    b_rows = sorted(map(str, batch.collect()))
+    assert s_rows, "append-mode stream emitted nothing"
+    assert set(s_rows) <= set(b_rows), sorted(set(s_rows) - set(b_rows))[:3]
+    assert len(s_rows) == len(set(s_rows)), "stream emitted a row twice"
+    assert len(b_rows) - len(s_rows) <= horizon, (len(s_rows), len(b_rows))
+
+    times = {str(r[time_col]) for r in streamed.select(time_col).collect()}
+    assert len(times) >= min_times, f"suspiciously few distinct times: {len(times)}"
+    assert min(times) >= "2000-01-01", sorted(times)[:3]
 
 
 def test_stream_parquet_sink_with_checkpoint(spark, sf_dir, tmp_path):
@@ -75,57 +119,6 @@ def test_stream_parquet_sink_with_checkpoint(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == batch_n
 
 
-def test_streaming_dedup_drops_redelivered_events(spark, tmp_path):
-    """streaming_dedup keeps the FIRST arrival per event_id and drops
-    re-deliveries landing in later microbatches (at-least-once source →
-    exactly-once-per-key downstream). Two files → two microbatches with
-    maxFilesPerTrigger=1; the second re-delivers event 1."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from big_data_chicago_crimes_spark.schemas import EVENTS_RAW_SCHEMA
-    from big_data_chicago_crimes_spark.streaming import streaming_dedup
-
-    from pyspark.sql import functions as F
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    base_ns = 1_600_000_000 * 10**9
-
-    def write(name, rows):
-        tbl = pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([base_ns + r[1] * 10**9 for r in rows], pa.int64()),
-                "user_id": pa.array([1] * len(rows), pa.int64()),
-                "event_type": pa.array(["view"] * len(rows)),
-                "value": pa.array([1.0] * len(rows)),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-        pq.write_table(tbl, str(src / name))
-
-    write("batch1.parquet", [(1, 0), (2, 10)])
-    write("batch2.parquet", [(1, 20), (3, 30)])  # event 1 re-delivered
-
-    raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    deduped = streaming_dedup(stream, ["event_id"], watermark="1 hour")
-    out = run_stream_to_memory(deduped, "stream_dedup_test", output_mode="append")
-    ids = sorted(r.event_id for r in out.select("event_id").collect())
-    assert ids == [1, 2, 3]
-
-    # batch mode: same call degrades to keyed dedup
-    batch = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c")], "event_id long, x string"
-    )
-    assert streaming_dedup(batch, ["event_id"]).count() == 2
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Late-data semantics: an event older than the watermark when its
     microbatch arrives must NOT resurrect its (already finalized)
@@ -135,10 +128,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
     from big_data_chicago_crimes_spark.schemas import EVENTS_RAW_SCHEMA
-    from big_data_chicago_crimes_spark.streaming import tumbling_window_agg
 
     src = tmp_path / "late_src"
     src.mkdir()
@@ -179,7 +169,10 @@ def test_watermark_drops_late_events(spark, tmp_path):
         .parquet(str(src))
     )
     stream = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    agg = tumbling_window_agg(stream, width="1 hour", watermark="2 hours")
+    # slide == width: the sliding builder's tumbling case
+    agg = sliding_window_agg(
+        stream, width="1 hour", slide="1 hour", watermark="2 hours"
+    )
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -202,33 +195,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert 2 in by_window.values(), by_window
     assert 3 not in by_window.values(), by_window
     assert dropped == 1
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
-    """Watermarked stream-stream interval join (purchases x prior views
-    within 30 min) must emit exactly the batch range join's rows — the
-    remaining first-class streaming operator, same-builder both modes."""
-    from big_data_chicago_crimes_spark.streaming import (
-        purchases_after_views_interval_join,
-    )
-
-    def split(df):
-        return (
-            df.filter(df.event_type == "purchase"),
-            df.filter(df.event_type == "view"),
-        )
-
-    batch = load_table(spark, sf_dir, "events")
-    bp, bv = split(batch)
-    expected = sorted(
-        map(str, purchases_after_views_interval_join(bp, bv).collect())
-    )
-    assert expected  # the fixture must actually exercise the join
-
-    sp, sv = split(read_events_stream(spark, sf_dir))
-    joined = purchases_after_views_interval_join(sp, sv)
-    out = run_stream_to_memory(joined, "stream_interval_join_test", "append")
-    assert sorted(map(str, out.collect())) == expected
 
 
 def test_hash_sampling_filters_apply_to_streams(spark, sf_dir):
@@ -260,10 +226,7 @@ def test_stream_static_dedup_matches_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from big_data_chicago_crimes_spark.operators.dedup import doc_fingerprint
-    from big_data_chicago_crimes_spark.streaming import run_stream_to_memory
-    from big_data_chicago_crimes_spark.streaming.joins import (
-        dedup_stream_against_corpus,
-    )
+    from big_data_chicago_crimes_spark.streaming import dedup_stream_against_corpus
 
     src = tmp_path / "docs_src"
     src.mkdir()
@@ -313,240 +276,3 @@ def test_stream_static_dedup_matches_batch(spark, tmp_path):
     # corpus-known fingerprint must be absent from the stream output
     known = corpus_fps.collect()[0].fingerprint
     assert known not in got
-
-
-def test_foreachbatch_ingest_dedupes_across_microbatches(spark, tmp_path):
-    """ingest_with_incremental_dedup closes the incremental loop: a doc
-    accepted in micro-batch 1 must be REJECTED in micro-batch 2 (its
-    fingerprint was appended to the index between batches), alongside
-    in-batch dups and corpus-known dups."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from big_data_chicago_crimes_spark.streaming.joins import (
-        ingest_with_incremental_dedup,
-    )
-
-    src = tmp_path / "crawls"
-    src.mkdir()
-    accepted = str(tmp_path / "accepted")
-    index = str(tmp_path / "fp_index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(name, rows):
-        tbl = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows]),
-            }
-        )
-        pq.write_table(tbl, str(src / name))
-
-    write("crawl1.parquet", [(10, "alpha doc"), (11, "beta doc"), (12, "Alpha   Doc")])
-    write("crawl2.parquet", [(20, "ALPHA doc"), (21, "gamma doc")])
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    q = ingest_with_incremental_dedup(stream, accepted, index, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {r.doc_id for r in spark.read.parquet(accepted).collect()}
-    # 10 (alpha, first arrival), 11 (beta), 21 (gamma); 12 in-batch dup,
-    # 20 cross-micro-batch dup of 10 via the growing index
-    assert got == {10, 11, 21}, got
-    fps = [r.fingerprint for r in spark.read.parquet(index).collect()]
-    assert len(fps) == 3 and len(set(fps)) == 3
-
-
-def test_foreachbatch_ingest_survives_restart(spark, tmp_path):
-    """The docstring's 'across RESTARTS' claim: stop the ingest query,
-    add a new crawl re-delivering an already-accepted doc, start a NEW
-    query on the SAME checkpoint — the restarted stream must process
-    only the new file and reject the re-delivery via the persisted
-    fingerprint index."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from big_data_chicago_crimes_spark.streaming.joins import (
-        ingest_with_incremental_dedup,
-    )
-
-    src = tmp_path / "crawls"
-    src.mkdir()
-    accepted = str(tmp_path / "accepted")
-    index = str(tmp_path / "fp_index")
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(name, rows):
-        tbl = pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows]),
-            }
-        )
-        pq.write_table(tbl, str(src / name))
-
-    def start():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        return ingest_with_incremental_dedup(stream, accepted, index, ckpt)
-
-    write("crawl1.parquet", [(1, "first doc"), (2, "second doc")])
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert {r.doc_id for r in spark.read.parquet(accepted).collect()} == {1, 2}
-
-    # restart on the same checkpoint; the new crawl re-delivers doc 1's
-    # content under a fresh id and adds one genuinely new doc
-    write("crawl2.parquet", [(10, "FIRST   doc"), (11, "third doc")])
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r.doc_id for r in spark.read.parquet(accepted).collect()}
-    assert got == {1, 2, 11}, got  # 10 rejected by the persisted index
-    fps = [r.fingerprint for r in spark.read.parquet(index).collect()]
-    assert len(fps) == 3 and len(set(fps)) == 3  # no re-appends on restart
-
-
-def test_ingest_process_batch_replay_idempotent(spark, tmp_path):
-    """The replay contract (ADVICE r8): re-running a micro-batch with
-    the same batch_id — the checkpoint-recovery case — must not
-    duplicate accepted rows or index fingerprints; and a crash BETWEEN
-    the two appends (accepted written, index not) must be finished from
-    the written accepted rows on replay."""
-    from pyspark.sql import functions as F
-
-    from big_data_chicago_crimes_spark.streaming.joins import ingest_process_batch
-
-    accepted = str(tmp_path / "accepted")
-    index = str(tmp_path / "fp_index")
-    batch = spark.createDataFrame(
-        [(1, "first doc"), (2, "second doc"), (3, "First   DOC")],
-        "doc_id long, text string",
-    )
-
-    ingest_process_batch(batch, 0, accepted, index)
-    ingest_process_batch(batch, 0, accepted, index)  # full replay: no-op
-    acc = spark.read.parquet(accepted)
-    assert sorted(r.doc_id for r in acc.collect()) == [1, 2]
-    assert spark.read.parquet(index).count() == 2
-
-    # crash between writes: batch 1's accepted rows land, index doesn't
-    batch2 = spark.createDataFrame([(10, "third doc")], "doc_id long, text string")
-    batch2.withColumn("batch_id", F.lit(1)).write.mode("append").parquet(accepted)
-    ingest_process_batch(batch2, 1, accepted, index)  # replay finishes index
-    assert spark.read.parquet(accepted).count() == 3  # no duplicate rows
-    fps = [r.fingerprint for r in spark.read.parquet(index).collect()]
-    assert len(fps) == 3 and len(set(fps)) == 3
-
-    # batch 2 against the recovered index: the doc 10 twin is rejected
-    batch3 = spark.createDataFrame(
-        [(20, "THIRD doc"), (21, "fourth doc")], "doc_id long, text string"
-    )
-    ingest_process_batch(batch3, 2, accepted, index)
-    got = sorted(r.doc_id for r in spark.read.parquet(accepted).collect())
-    assert got == [1, 2, 10, 21], got
-
-
-def test_ingest_replay_sees_batch_id_despite_legacy_files(spark, tmp_path):
-    """Upgraded-deployment replay (ADVICE r9): when the accepted table
-    holds OLD files written before the batch_id column existed, schema
-    inference may sample a legacy file and hide batch_id — the replay
-    probe must still see the already-written batch (mergeSchema) or it
-    double-appends accepted rows."""
-    from pyspark.sql import functions as F
-
-    from big_data_chicago_crimes_spark.streaming.joins import ingest_process_batch
-
-    accepted = str(tmp_path / "accepted")
-    index = str(tmp_path / "fp_index")
-    # legacy ingest: accepted rows with NO batch_id column, in MANY
-    # files so post-merge inference would likely sample one of them
-    legacy = spark.createDataFrame(
-        [(i, f"legacy doc {i}") for i in range(8)], "doc_id long, text string"
-    )
-    legacy.repartition(8).write.mode("append").parquet(accepted)
-    legacy.select(
-        F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")).alias(
-            "fingerprint"
-        )
-    ).write.mode("append").parquet(index)
-
-    # new-version ingest writes batch 7, then the batch is replayed
-    batch = spark.createDataFrame([(100, "novel doc")], "doc_id long, text string")
-    ingest_process_batch(batch, 7, accepted, index)
-    ingest_process_batch(batch, 7, accepted, index)  # replay: must no-op
-    acc = spark.read.option("mergeSchema", "true").parquet(accepted)
-    assert acc.filter(F.col("doc_id") == 100).count() == 1  # no double-append
-
-
-def test_streaming_dedup_rejects_empty_key_list(spark):
-    import pytest
-
-    from big_data_chicago_crimes_spark.streaming.windows import streaming_dedup
-
-    df = spark.createDataFrame([(1,)], "event_id long")
-    with pytest.raises(ValueError, match="non-empty"):
-        streaming_dedup(df, keys=[])
-
-
-def test_ingest_recovers_from_empty_uncommitted_directory(spark, tmp_path):
-    """A crash during the very first write's job commit leaves the
-    directory existing with no committed parquet files — the replay
-    probe must treat that as 'no batch written', not wedge the stream
-    with an unable-to-infer-schema error."""
-    import os
-
-    from big_data_chicago_crimes_spark.streaming.joins import ingest_process_batch
-
-    accepted = str(tmp_path / "accepted")
-    index = str(tmp_path / "index")
-    os.makedirs(accepted)  # exists, holds zero committed files
-    batch = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
-    ingest_process_batch(batch, 0, accepted, index)
-    got = spark.read.parquet(accepted)
-    assert got.count() == 1
-
-
-def test_stream_matches_batch_windowed_distinct_hll(spark, sf_dir):
-    """The chained two-aggregation HLL plan (register max -> per-window
-    estimate) must run as a STREAM (multiple stateful operators, append
-    mode) and agree with the batch form per window. Append mode emits
-    only watermark-finalized windows, so the stream's rows are a prefix
-    of the batch result: every emitted window must match its batch twin
-    EXACTLY (integer sketch state included), and the emission must
-    cover all but the trailing watermark horizon."""
-    from big_data_chicago_crimes_spark.streaming import windowed_distinct_hll
-
-    stream = read_events_stream(spark, sf_dir)
-    streamed = run_stream_to_memory(
-        windowed_distinct_hll(stream), "stream_hll_test", output_mode="append"
-    )
-    batch = windowed_distinct_hll(load_table(spark, sf_dir, "events"))
-
-    def key(rows):
-        return {
-            r["w"]["start"]: (r["n_regs"], r["z_int"], r["hll_est"]) for r in rows
-        }
-
-    s, b = key(streamed.collect()), key(batch.collect())
-    assert s, "append-mode stream emitted nothing"
-    for w, state in s.items():
-        assert state == b[w], (w, state, b[w])
-    # hourly windows over ~30 days ≈ 700+; the 2h watermark may hold
-    # back only the trailing horizon
-    assert len(s) > 100 and len(s) >= len(b) - 4, (len(s), len(b))

@@ -247,12 +247,25 @@ def test_lang_id_zero_token_doc_survives_as_und(spark, tmp_path):
     assert got == oracle
 
 
-def test_lang_id_null_text_is_und_not_first_language(spark):
-    from big_data_chicago_crimes_spark.functions.text import lang_id_scores
+def test_lang_id_null_text_is_und_not_first_language(spark, tmp_path):
+    """A NULL-text document has no marker evidence: the census must
+    count it as ('und', 'und'), not as the tie-break's first language
+    ('de')."""
+    from big_data_chicago_crimes_spark.plans.registry import all_queries
 
-    df = spark.createDataFrame([(None,), ("the of and to in",)], "text string")
-    out = [r["lang"] for r in df.select(lang_id_scores("text").alias("lang")).collect()]
-    assert out == ["und", "en"]
+    q = all_queries()["docs_lang_id"]
+    # doc ids avoid the %7 transliteration branch
+    docs = spark.createDataFrame(
+        [(1, None, "en", "src0", 0), (2, "the of and to in", "en", "src0", 16)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    got = {
+        (r.predicted_lang, r.dominant_script): r.n_docs
+        for r in q.build(spark, str(tmp_path)).collect()
+    }
+    assert got == {("und", "und"): 1, ("en", "latin"): 1}, got
 
 
 def test_pii_counts_agree_with_sequential_redaction_on_overlap(spark):
